@@ -10,13 +10,24 @@ Usage:
 Stages (each a parquet checkpoint + lineage record, skipped on resume):
     docs      — docId assignment (dense rank over (repo, path)) + sha256
                 ingest-invariant check (build FAILS on violation)
-    postings  — (term, doc_id, tf, positions)
+    postings  — (term, doc_id, tf, positions), built map-side from the
+                raw documents (no shuffle)
     doc_lens  — (doc_id, dl)
     forms     — freq-ordered vocabulary (form_id, term, occs, docs)
     offsets   — (doc_id, pos, start, end, term) char offsets for render ops
-    segments0 — compressed per-range posting segments (bucket-partitioned)
-    norms0    — per-segment 1-byte norms
-    segmentsK/normsK — tree-merge rounds (Lucene-style background merges)
+    segments0 — compressed per-range posting segments (bucket-partitioned),
+                encoded once at the final segment size
+    norms0    — per-segment 1-byte norms at the final segment size
+
+The final segment size is ``seg_size · merge_group^merge_rounds``. A bulk
+build knows its final layout up front, so it encodes segments once at
+that size instead of writing small segments and merging them in rounds:
+a merge tree of disjoint, ordered doc ranges is bit-identical to a
+direct build at the coarser size (tests/test_build_pipeline.py). Merges
+run only where segments really arrive over time, in
+``StreamingIndexer.compact()``. The two segment stages keep their
+round-0 names, so indexes and tools that read ``segments0``/``norms0``
+as the encoding stage still do.
 
 The final segment/norm tables + forms are everything the WAND query path
 needs (see alix_spark.search.wand / alix_spark.index.reader).
@@ -41,8 +52,20 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--text-col", default="content")
     ap.add_argument("--seg-size", type=int, default=8192)
     ap.add_argument("--buckets", type=int, default=32)
-    ap.add_argument("--merge-rounds", type=int, default=2)
-    ap.add_argument("--merge-group", type=int, default=2)
+    ap.add_argument(
+        "--merge-rounds",
+        type=int,
+        default=2,
+        help="final segment size factor: segments are encoded at "
+        "seg-size · merge-group^merge-rounds docs, the layout the former "
+        "merge rounds produced",
+    )
+    ap.add_argument(
+        "--merge-group",
+        type=int,
+        default=2,
+        help="segments per merge in the final-size factor (see --merge-rounds)",
+    )
     ap.add_argument("--master", default=None)
     ap.add_argument("--cpus", default=None)
     args = ap.parse_args(argv)
@@ -58,6 +81,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="alix-build-index", master=args.master)
     t_start = time.time()
     ctx = BuildContext(spark, args.out)
+    seg_size = args.seg_size * args.merge_group**args.merge_rounds
 
     if args.synth:
         src = ingest.synthesize_code_corpus(spark, args.synth)
@@ -65,6 +89,13 @@ def main(argv: list[str] | None = None) -> int:
     else:
         src = spark.read.parquet(args.input)
         fp = f"input:{args.input}"
+    # a stage's fingerprint names every parameter that shapes its output,
+    # so re-running into the same --out with other parameters re-runs the
+    # stages they change instead of reusing stale tables
+    fp = f"{fp}|text_col={args.text_col}"
+    fp_offsets = f"{fp}|buckets={args.buckets}"
+    fp_segments = f"{fp}|seg_size={seg_size}|buckets={args.buckets}"
+    fp_norms = f"{fp}|seg_size={seg_size}"
 
     # ---- stage: docs (id assignment + sha256 invariant) ----
     def build_docs():
@@ -85,12 +116,16 @@ def main(argv: list[str] | None = None) -> int:
     docs = ctx.run_stage("docs", fp, build_docs)
     n_docs_total = docs.count()
 
-    tokens = simple.tokenize(docs, "doc_id", args.text_col)
-
-    postings = ctx.run_stage("postings", fp, lambda: ib.build_postings(tokens))
+    # a posting row depends only on its own document: the map-side
+    # kernel tokenizes each Arrow batch and writes finished rows, with
+    # no token table and no shuffle between the scan and the sink
+    postings = ctx.run_stage(
+        "postings",
+        fp,
+        lambda: ib.build_postings_from_docs(docs, "doc_id", args.text_col),
+    )
     # doc_lens and forms both derive from the materialized postings
-    # stage (dl = Σ tf): one corpus tokenize+shuffle feeds all three
-    # tables instead of paying a second pass for lengths
+    # stage (dl = Σ tf) instead of paying a second pass for lengths
     doc_lens = ctx.run_stage(
         "doc_lens", fp, lambda: ib.build_doc_lens_from_postings(postings)
     )
@@ -102,7 +137,7 @@ def main(argv: list[str] | None = None) -> int:
     # doc-range read prunes on parquet stats.
     ctx.run_stage(
         "offsets",
-        fp,
+        fp_offsets,
         lambda: simple.token_offsets(docs, "doc_id", args.text_col)
         .repartitionByRange(args.buckets, F.col("doc_id"))
         .sortWithinPartitions("doc_id", "pos"),
@@ -112,39 +147,39 @@ def main(argv: list[str] | None = None) -> int:
 
     n_docs, avgdl = corpus_stats(doc_lens)
 
-    # segments0 is the SINGLE-PASS build shuffling raw documents (the
-    # kernel tokenizes, counts, encodes postings+positions AND emits the
-    # norm rows in bucket -1): one corpus-sized exchange, nothing else.
-    # one file per bucket dir (not shuffle-partitions × buckets): the
-    # file-commit count is a serial cost and query-side open cost
-    unioned = ctx.run_stage(
+    # segments0 is the single-pass build shuffling raw documents: one
+    # corpus-sized exchange, encoded at the final size. Its norm rows are
+    # dropped, so the table holds one leaf dir per bucket: the default 32
+    # stay within Spark's 32-path parallel-listing threshold, and opening
+    # the table lists files on the driver, with no listing job. One file
+    # per bucket dir because the file-commit count is a serial cost and a
+    # query-side open cost.
+    ctx.run_stage(
         "segments0",
-        fp,
+        fp_segments,
         lambda: seg_mod.build_single_pass_from_docs(
             docs.select("doc_id", args.text_col),
             text_col=args.text_col,
-            seg_size=args.seg_size,
+            seg_size=seg_size,
             n_buckets=args.buckets,
-        ).repartition(args.buckets + 1, F.col("bucket")),
+        )
+        .filter(F.col("term") != seg_mod.NORM_MARKER)
+        .repartition(args.buckets, F.col("bucket")),
         partition_by=["bucket"],
     )
-    segs, norms_view = seg_mod.split_single_pass(unioned)
-    # norms0 reads ONLY the bucket=-1 partition dir (partition pruning)
-    norms = ctx.run_stage("norms0", fp, lambda: norms_view)
-
-    seg_size = args.seg_size
-    for r in range(1, args.merge_rounds + 1):
-        m_df, n_df = seg_mod.merge_segments(
-            segs, norms, group=args.merge_group
-        )
-        segs = ctx.run_stage(
-            f"segments{r}",
-            fp,
-            lambda m=m_df: m.repartition(args.buckets, F.col("bucket")),
-            partition_by=["bucket"],
-        )
-        norms = ctx.run_stage(f"norms{r}", fp, lambda n=n_df: n)
-        seg_size *= args.merge_group
+    # norms0 from the (one row per doc) doc_lens table, not the corpus;
+    # every doc also enters with dl 0 so a segment of only empty docs
+    # still gets its norm row, exactly as the single-pass kernel emits
+    ctx.run_stage(
+        "norms0",
+        fp_norms,
+        lambda: seg_mod.build_norms(
+            doc_lens.unionByName(
+                docs.select("doc_id", F.lit(0).cast("int").alias("dl"))
+            ),
+            seg_size=seg_size,
+        ),
+    )
 
     # meta + consolidated lineage/metrics
     spark.createDataFrame(
@@ -155,8 +190,8 @@ def main(argv: list[str] | None = None) -> int:
                 "avgdl": avgdl,
                 "seg_size_final": seg_size,
                 "buckets": args.buckets,
-                "final_segments": f"segments{args.merge_rounds}",
-                "final_norms": f"norms{args.merge_rounds}",
+                "final_segments": "segments0",
+                "final_norms": "norms0",
             }
         ]
     ).coalesce(1).write.mode("overwrite").json(f"{args.out}/_meta")

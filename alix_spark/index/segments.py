@@ -219,14 +219,19 @@ def build_segments(
 
 def build_norms(doc_lens: DataFrame, seg_size: int = DEFAULT_SEG_SIZE) -> DataFrame:
     """doc_lens → per-segment norm-byte arrays (1 byte/doc, Lucene
-    layout). Docs with no tokens get norm byte 0."""
+    layout). Docs with no tokens get norm byte 0. A ``dl == 0`` row only
+    marks its segment as present: a segment of empty docs still gets a
+    row (``n_docs`` 0), and trailing empty docs do not extend the array
+    — the norm rows of the single-pass kernels, byte for byte."""
 
     def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
         seg_id = int(pdf["seg_id"].iloc[0])
         first = seg_id * seg_size
         dls = pdf["dl"].to_numpy(np.int64)
-        offs = (pdf["doc_id"].to_numpy(np.int64) - first).astype(np.int64)
-        arr = np.zeros(int(offs.max()) + 1, dtype=np.uint8)
+        keep = dls > 0
+        dls = dls[keep]
+        offs = pdf["doc_id"].to_numpy(np.int64)[keep] - first
+        arr = np.zeros(int(offs.max()) + 1 if offs.size else 0, dtype=np.uint8)
         arr[offs] = codec.int_to_byte4(dls)
         return pd.DataFrame(
             [(seg_id, first, int(arr.size), int(dls.sum()), arr.tobytes())],
@@ -602,6 +607,25 @@ def positions_per_doc(
     ]
 
 
+def _concat_norms(parts: pd.DataFrame) -> tuple[int, np.ndarray]:
+    """Norm rows of adjacent segments → (first_doc, concatenated bytes).
+
+    The array ends at the last part with docs: a part whose docs are all
+    empty (``n_docs`` 0) adds no bytes, so the merged row equals the row
+    a direct build at the coarser size writes."""
+    first = int(parts["_first_doc"].min())
+    has_docs = parts["_n_docs"] > 0
+    ends = parts["_first_doc"] + parts["_n_docs"]
+    total = int(ends[has_docs].max() - first) if has_docs.any() else 0
+    arr = np.zeros(total, dtype=np.uint8)
+    for fd, nd, nb in zip(
+        parts["_first_doc"], parts["_n_docs"], parts["_norm_bytes"]
+    ):
+        off = int(fd) - first
+        arr[off : off + int(nd)] = np.frombuffer(nb, dtype=np.uint8)
+    return first, arr
+
+
 def merge_segments(
     segments: DataFrame,
     norms: DataFrame,
@@ -634,19 +658,7 @@ def merge_segments(
         if pdfs.empty or npdf.empty:
             return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
         (new_seg_id,) = key
-        first = int(npdf["_first_doc"].min())
-        norm_parts = npdf.sort_values("_first_doc")
-        total = int(
-            (norm_parts["_first_doc"] + norm_parts["_n_docs"]).max() - first
-        )
-        norm_arr = np.zeros(total, dtype=np.uint8)
-        for fd, nd, nb in zip(
-            norm_parts["_first_doc"],
-            norm_parts["_n_docs"],
-            norm_parts["_norm_bytes"],
-        ):
-            off = int(fd) - first
-            norm_arr[off : off + int(nd)] = np.frombuffer(nb, dtype=np.uint8)
+        first, norm_arr = _concat_norms(npdf)
         dl_all = codec.byte4_to_int(norm_arr)
 
         out = []
@@ -695,17 +707,9 @@ def merge_segments(
 
     def merge_norms(pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(pdf["_new_seg"].iloc[0])
-        parts = pdf.sort_values("_first_doc")
-        first = int(parts["_first_doc"].min())
-        total = int((parts["_first_doc"] + parts["_n_docs"]).max() - first)
-        arr = np.zeros(total, dtype=np.uint8)
-        for fd, nd, nb in zip(
-            parts["_first_doc"], parts["_n_docs"], parts["_norm_bytes"]
-        ):
-            off = int(fd) - first
-            arr[off : off + int(nd)] = np.frombuffer(nb, dtype=np.uint8)
+        first, arr = _concat_norms(pdf)
         return pd.DataFrame(
-            [(seg, first, total, int(parts["_sum_dl"].sum()), arr.tobytes())],
+            [(seg, first, int(arr.size), int(pdf["_sum_dl"].sum()), arr.tobytes())],
             columns=[f.name for f in NORMS_SCHEMA.fields],
         )
 

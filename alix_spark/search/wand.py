@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from alix_spark.index import codec
+from alix_spark.index.xxhash import term_bucket
 from alix_spark.search.bm25 import B, K1
 
 TOPK_SCHEMA = StructType(
@@ -262,11 +263,10 @@ def wand_topk(
         for t in uniq
         if t in dfs
     }
-    # match Spark's xxhash64 bucket assignment by asking Spark itself
-    # (one tiny local job at planning time); the bucket filter prunes
-    # files/row-groups of the partitioned segment table before the term
-    # filter touches rows
-    buckets = sorted(set(_term_buckets(segments.sparkSession, uniq, n_buckets)))
+    # the bucket filter prunes files/row-groups of the partitioned segment
+    # table before the term filter touches rows; term_bucket is Spark's
+    # pmod(xxhash64(term), n) in pure Python, so planning runs no job
+    buckets = sorted({term_bucket(t, n_buckets) for t in uniq})
     pruned = segments.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
     ).select(*_SCORING_COLS)  # drop positions: dead weight for scoring
@@ -379,7 +379,7 @@ def wand_topk_batch(
         if t in dfs
     }
     weights_by_q = {qid: dict(Counter(ts)) for qid, ts in queries.items()}
-    buckets = sorted(set(_term_buckets(segments.sparkSession, all_terms, n_buckets)))
+    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
     pruned = segments.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
     ).select(*_SCORING_COLS)
@@ -449,12 +449,3 @@ def wand_topk_batch(
         .filter(F.col("_rank") <= k)
         .select("qid", "doc_id", "score", F.col("_rank").alias("rank"))
     )
-
-
-def _term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
-    """bucket ids for the query terms, using Spark's own xxhash64."""
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = df.select(
-        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b")
-    ).collect()
-    return [r["b"] for r in rows]

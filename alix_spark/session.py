@@ -8,19 +8,22 @@ and a shuffle-partition count that callers override per data size.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ALIX_SHUFFLE_PARTITIONS", "32"))
 # Scan-split parallelism floor. Spark's default is the session's core
 # count, which shreds small index tables (a 4 MB postings parquet) into
 # one split per file purely to satisfy the floor — every downstream job
-# then pays per-task overhead with no bytes to amortize it. "1" lets
-# byte-based sizing rule (maxPartitionBytes still caps splits at 128 MB,
-# so large tables split exactly as before); override per deployment when
-# a scan feeds a CPU-heavy map that needs more tasks than byte sizing
-# gives.
+# then pays per-task overhead with no bytes to amortize it. A floor of
+# "4" keeps small scans to a few splits and lets byte-based sizing rule
+# above it (maxPartitionBytes still caps splits at 128 MB, so large
+# tables split exactly as before); override per deployment when a scan
+# feeds a CPU-heavy map that needs more tasks than byte sizing gives.
 DEFAULT_MIN_PARTITION_NUM = os.environ.get("ALIX_MIN_PARTITION_NUM", "4")
 # Driver JVM heap. In local mode the driver IS the executor: the Spark
 # default of 1g left 32 concurrent tasks sharing ~430 MB of unified
@@ -124,5 +127,13 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .filter(F.col("term") == "x")
             .count()
         )
-    except Exception:
-        pass  # warmup is best-effort, never a session failure
+    except Exception as exc:
+        # warmup is best-effort, never a session failure — but say so:
+        # a failed warmup moves its cost onto the first query
+        log.warning(
+            "Python worker warmup failed (%s: %s); the first query pays "
+            "the worker start-up instead",
+            type(exc).__name__,
+            exc,
+            exc_info=True,
+        )

@@ -1,17 +1,23 @@
 """End-to-end build pipeline: spark-submit entry, lineage-based resume,
-sha256 ingest invariant, reader rank-identity on the persisted index."""
+sha256 ingest invariant, reader rank-identity on the persisted index, and
+the CLI's one-pass final-size segments against a merge tree."""
 
 from __future__ import annotations
 
 import json
 import math
+import shutil
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from alix_spark import build_index
+from alix_spark.index import segments as seg_mod
+from alix_spark.index.lineage import BuildContext
 from alix_spark.index.reader import IndexReader
 from tests.conftest import SF_SMOKE
+from tests.test_plan_hygiene import plan_of
 
 GOLDEN = json.loads(
     (Path(__file__).parent / "golden" / "lucene_topk_sf0.001.json").read_text()
@@ -21,76 +27,125 @@ OR_QUERIES = [
 ]
 
 
+# SF_SMOKE holds doc ids 0..499. Twenty docs without a token follow, so
+# the last 64-doc segment (448..511) ends in empty docs and the next one
+# (512..519) has nothing but empty docs.
+EMPTY_TEXTS = ["", None, "  ", "!!! --- ???", "\u00e9\u00e8"] * 4
+SEG_SIZE, MERGE_ROUNDS = 64, 2
+
+
+def _cli_args(src: str, out: str, seg_size: int = SEG_SIZE) -> list[str]:
+    return [
+        "--input", src,
+        "--text-col", "text",
+        "--out", out,
+        "--seg-size", str(seg_size),
+        "--merge-rounds", str(MERGE_ROUNDS),
+    ]
+
+
 @pytest.fixture(scope="module")
-def built_index(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("idx"))
-    rc = build_index.main(
-        [
-            "--input", f"{SF_SMOKE}/documents.parquet",
-            "--text-col", "text",
-            "--out", out,
-            "--seg-size", "64",
-            "--merge-rounds", "1",
-        ]
+def src_docs(spark, tmp_path_factory):
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    n = docs.count()
+    empties = spark.createDataFrame(
+        [(n + i, t, "en", "empty", 0) for i, t in enumerate(EMPTY_TEXTS)],
+        docs.select("doc_id", "text", "lang", "source", "n_chars").schema,
     )
-    assert rc == 0
+    src = str(tmp_path_factory.mktemp("src") / "docs.parquet")
+    docs.unionByName(empties).write.parquet(src)
+    return src
+
+
+@pytest.fixture(scope="module")
+def build_plans():
+    return {}
+
+
+@pytest.fixture(scope="module")
+def built_index(spark, src_docs, build_plans, tmp_path_factory):
+    """The CLI build, with the physical plan of every stage recorded."""
+    out = str(tmp_path_factory.mktemp("idx"))
+    run_stage = BuildContext.run_stage
+
+    def traced(self, stage, fingerprint, build, partition_by=None):
+        def plan_and_build():
+            df = build()
+            build_plans[stage] = plan_of(df)
+            return df
+
+        return run_stage(self, stage, fingerprint, plan_and_build, partition_by)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(BuildContext, "run_stage", traced)
+        assert build_index.main(_cli_args(src_docs, out)) == 0
     return out
 
 
-def _lineage_ts(out: str) -> dict[str, str]:
+def _lineage(out: str) -> dict[str, dict]:
     return {
-        p.stem: json.loads(p.read_text())["ts"]
+        p.stem: json.loads(p.read_text())
         for p in (Path(out) / "_lineage").glob("*.json")
     }
 
 
-def test_resume_skips_completed_stages(spark, built_index):
+def _lineage_ts(out: str) -> dict[str, str]:
+    return {stage: rec["ts"] for stage, rec in _lineage(out).items()}
+
+
+def test_resume_skips_completed_stages(spark, src_docs, built_index):
     before = _lineage_ts(built_index)
-    rc = build_index.main(
-        [
-            "--input", f"{SF_SMOKE}/documents.parquet",
-            "--text-col", "text",
-            "--out", built_index,
-            "--seg-size", "64",
-            "--merge-rounds", "1",
-        ]
-    )
-    assert rc == 0
+    assert build_index.main(_cli_args(src_docs, built_index)) == 0
     assert _lineage_ts(built_index) == before  # nothing re-ran
 
 
-def test_resume_after_partial_failure(spark, built_index):
-    """Simulate a crash after segments0: wipe the merge-round outputs and
+def test_resume_after_partial_failure(spark, src_docs, built_index):
+    """Simulate a crash after offsets: wipe the segment and norm stages'
     lineage, re-run, and check only those stages re-execute."""
     out = Path(built_index)
     before = _lineage_ts(built_index)
-    for stage in ["segments1", "norms1"]:
+    wiped = ("segments0", "norms0")
+    for stage in wiped:
         (out / "_lineage" / f"{stage}.json").unlink()
-    rc = build_index.main(
-        [
-            "--input", f"{SF_SMOKE}/documents.parquet",
-            "--text-col", "text",
-            "--out", built_index,
-            "--seg-size", "64",
-            "--merge-rounds", "1",
-        ]
-    )
-    assert rc == 0
+    assert build_index.main(_cli_args(src_docs, built_index)) == 0
     after = _lineage_ts(built_index)
+    assert after.keys() == before.keys()  # the wiped stages ran again
     for stage, ts in after.items():
-        if stage in ("segments1", "norms1"):
+        if stage in wiped:
             assert ts >= before[stage]
         else:
             assert ts == before[stage], f"stage {stage} unexpectedly re-ran"
 
 
-def test_fingerprint_change_invalidates(spark, built_index, tmp_path):
-    """A different input fingerprint must re-run stages, not reuse them."""
-    from alix_spark.index.lineage import BuildContext
+def test_changed_seg_size_reruns_segments_and_norms(
+    spark, src_docs, built_index, tmp_path
+):
+    """Stage fingerprints name the parameters that shape a stage: re-running
+    into the same --out with another --seg-size must rebuild segments and
+    norms at the new size (not reuse the old tables under a new _meta),
+    and must reuse every other stage."""
+    out = str(tmp_path / "idx")
+    shutil.copytree(built_index, out)
+    before = _lineage(out)
+    assert build_index.main(_cli_args(src_docs, out, seg_size=32)) == 0
+    after = _lineage(out)
+    rerun = {s for s in after if after[s]["fingerprint"] != before[s]["fingerprint"]}
+    assert rerun == {"segments0", "norms0"}
+    for stage in after.keys() - rerun:
+        assert after[stage] == before[stage], f"stage {stage} unexpectedly re-ran"
+    r = IndexReader(spark, out)
+    assert r.meta["seg_size_final"] == 32 * 4
+    seg_ids = sorted(x["seg_id"] for x in r.norms.select("seg_id").collect())
+    assert seg_ids == list(range(519 // 128 + 1))
+    assert r.segments.agg(F.max("seg_id")).first()[0] == 499 // 128
 
+
+def test_fingerprint_change_invalidates(spark, src_docs, built_index):
+    """A different input fingerprint must re-run stages, not reuse them."""
     ctx = BuildContext(spark, built_index)
-    assert ctx.stage_done("docs", f"input:{SF_SMOKE}/documents.parquet")
-    assert not ctx.stage_done("docs", "input:/some/other/table")
+    assert ctx.stage_done("docs", f"input:{src_docs}|text_col=text")
+    assert not ctx.stage_done("docs", "input:/some/other/table|text_col=text")
+    assert not ctx.stage_done("docs", f"input:{src_docs}|text_col=content")
 
 
 def test_sha256_invariant_enforced(spark, tmp_path):
@@ -120,6 +175,106 @@ def test_reader_rank_identity(spark, built_index):
         assert [d for d, _ in got] == [d for d, _ in exp], case["q"]
         for (gd, gs), (_, es) in zip(got, exp):
             assert math.isclose(gs, es, rel_tol=1e-5, abs_tol=1e-6)
+
+
+
+def _rows(df, key: list[str]) -> list[tuple]:
+    """Every row of a table, binary columns as bytes, in key order."""
+    cols = sorted(df.columns)
+    pdf = df.select(*cols).toPandas().sort_values(key)
+    return [
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in row)
+        for row in pdf.itertuples(index=False)
+    ]
+
+
+def test_final_tables_equal_merge_tree(spark, src_docs, built_index):
+    """The CLI encodes segments once at seg_size · 2^rounds; its tables must
+    equal the small-segment build followed by the merge rounds, byte for
+    byte — including the segment that ends in empty docs and the one that
+    holds nothing else."""
+    docs = spark.read.parquet(src_docs).select("doc_id", "text")
+    segs, norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, text_col="text", seg_size=SEG_SIZE)
+    )
+    for _ in range(MERGE_ROUNDS):
+        segs, norms = seg_mod.merge_segments(segs, norms, group=2)
+    r = IndexReader(spark, built_index)
+    assert r.meta["seg_size_final"] == SEG_SIZE * 2**MERGE_ROUNDS
+    seg_key = ["term", "seg_id", "block_id"]
+    got_segs = _rows(spark.read.parquet(f"{built_index}/segments0"), seg_key)
+    assert got_segs == _rows(segs, seg_key)
+    got_norms = _rows(r.norms, ["seg_id"])
+    assert got_norms == _rows(norms, ["seg_id"])
+    by_seg = {row["seg_id"]: row for row in r.norms.collect()}
+    assert sorted(by_seg) == [0, 1, 2]
+    assert by_seg[1]["n_docs"] == 500 - 256  # trailing empty docs add no bytes
+    # a segment of nothing but empty docs keeps its (empty) norm row
+    assert (by_seg[2]["first_doc"], by_seg[2]["n_docs"]) == (512, 0)
+    assert bytes(by_seg[2]["norm_bytes"]) == b""
+
+
+
+def test_merge_of_empty_segment_equals_direct_build(spark, src_docs):
+    """At 24 docs a segment, 480..503 ends in empty docs and 504..527 holds
+    only empty ones; merged in one group they must give the direct-build
+    norm row, whose bytes end at the last doc with a token."""
+    docs = spark.read.parquet(src_docs).select("doc_id", "text")
+    segs, norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, text_col="text", seg_size=24)
+    )
+    for _ in range(2):
+        segs, norms = seg_mod.merge_segments(segs, norms, group=2)
+    _, direct = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, text_col="text", seg_size=96)
+    )
+    assert _rows(norms, ["seg_id"]) == _rows(direct, ["seg_id"])
+
+
+def test_reader_sees_only_posting_rows(spark, built_index):
+    r = IndexReader(spark, built_index)
+    assert r.segments.filter(
+        (F.col("term") == seg_mod.NORM_MARKER) | (F.col("bucket") < 0)
+    ).count() == 0
+
+
+def test_reader_open_runs_no_listing_job(spark, tmp_path):
+    """One leaf dir per bucket keeps the segment table at Spark's
+    parallel-listing threshold (32 paths): open lists files on the
+    driver. A vocabulary that fills all 32 buckets makes the check bite."""
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(d, " ".join(f"w{d * 8 + i}" for i in range(8))) for d in range(64)],
+        "doc_id long, text string",
+    ).write.parquet(src)
+    out = str(tmp_path / "idx")
+    assert build_index.main(
+        ["--input", src, "--text-col", "text", "--out", out, "--seg-size", "16"]
+    ) == 0
+    assert len(list(Path(out, "segments0").glob("bucket=*"))) == 32
+    sc = spark.sparkContext
+    sc.setJobGroup("test-reader-open", "open")
+    try:
+        IndexReader(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    descriptions = [
+        store.job(j).description()
+        for j in sc.statusTracker().getJobIdsForGroup("test-reader-open")
+    ]
+    listing = [
+        d.get() for d in descriptions
+        if d.isDefined() and d.get().startswith("Listing leaf files")
+    ]
+    assert listing == []
+
+
+def test_postings_stage_has_no_exchange(built_index, build_plans):
+    """Postings come map-side from the raw docs: no token shuffle."""
+    assert "postings" in build_plans
+    assert "Exchange" not in build_plans["postings"]
 
 
 def test_synth_corpus_deterministic(spark):
