@@ -153,8 +153,9 @@ def q_wildcard_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 — boolean MUST/MUST_NOT retrieval (+fast +join -window),
-    served from the PERSISTED index: decoded posting doc sets
-    intersect/anti-join, no corpus rescan (``Alix.java:714-754``)."""
+    served from the PERSISTED index: one per-segment kernel masks each
+    segment's docs to the MUST intersection minus the MUST_NOT docs, no
+    join, no corpus rescan (``Alix.java:714-754``)."""
     r = _index_reader(spark, sf_dir)
     return r.boolean_docs("+fast +join -window")
 

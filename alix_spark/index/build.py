@@ -50,6 +50,18 @@ def build_postings(tokens: DataFrame, positions: bool = True) -> DataFrame:
     )
 
 
+def reject_null_ids(ids, col: str) -> None:
+    """Raise a ValueError naming ``col`` if a batch of document ids (a
+    pandas Series) holds a null: a posting or a segment needs its doc id,
+    and ``int()`` of the null (NaN in the Arrow batch) would fail deep in
+    the kernel without naming the column or the cause."""
+    if ids.isna().any():
+        raise ValueError(
+            f"null document id in column {col!r}: every document needs "
+            "an id before it is indexed"
+        )
+
+
 def build_postings_from_docs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -104,6 +116,7 @@ def build_postings_from_docs(
 
         cols = ["term", "doc_id", "tf"] + (["positions"] if want_pos else [])
         for pdf in batches:
+            reject_null_ids(pdf["doc_id"], id_col)
             doc_arrs: list[np.ndarray] = []
             term_arrs: list[str] = []
             pos_arrs: list[np.ndarray] = []

@@ -2,11 +2,19 @@
 
 The query-side counterpart of :mod:`alix_spark.build_index`: loads the
 meta, forms, final segment + norm tables, and answers the FULL query
-surface — ranked OR (block-max WAND), MUST / MUST_NOT boolean
-restriction, and wildcard prefix expansion — from the persisted
-segments, with no corpus rescan. Plays the role of the reference's
+surface — ranked OR, MUST / MUST_NOT boolean restriction, pure-negative
+and wildcard prefix expansion — from the persisted segments, with no
+corpus rescan. Plays the role of the reference's
 ``Alix.reader()/searcher()`` lazy singletons plus its query assembly
 (``/root/reference/java/alix/lucene/Alix.java:298-344,687-756``).
+
+Every ranked query runs as Lucene runs a ``BooleanQuery``: inside each
+segment, against that segment's postings and norms. The plan is one
+cogroup of the (bucket, term)-pruned segment rows with the norm rows,
+one kernel per segment (block-max WAND for pure OR, the exhaustive
+boolean kernel otherwise — :mod:`alix_spark.search.wand`), then one
+global top-k. No query joins, and none expands the norms into a per-doc
+table.
 
 Scoring on this path is Lucene-faithful: per-doc lengths come from the
 stored SmallFloat norms (byte-quantized, like Lucene's), avgdl from the
@@ -17,18 +25,10 @@ jar in tests/test_lucene_rank_identity.py.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-POSTINGS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("term", StringType()),
-        StructField("tf", IntegerType()),
-    ]
-)
+from alix_spark.search import wand as wand_mod
 
 
 def expand_prefixes(
@@ -173,59 +173,14 @@ class IndexReader:
     # -- posting access -------------------------------------------------
     def dfs_for(self, terms: list[str]) -> dict[str, int]:
         uniq = sorted(set(terms))
+        if not uniq:
+            return {}
         return {
             r["term"]: int(r["docs"])
             for r in self.forms.filter(F.col("term").isin(uniq))
             .select("term", "docs")
             .collect()
         }
-
-    def decoded_postings(self, terms: list[str]) -> DataFrame:
-        """(doc_id, term, tf) for the given terms, decoded from the
-        compressed segments. The scan is bucket+term pruned (pushed to
-        parquet); the varbyte decode runs per docId-range segment in an
-        Arrow kernel — the same distribution shape as the WAND scorer,
-        so a Zipf-head term never concentrates on one task."""
-        from alix_spark.index import segments as seg_mod
-        from alix_spark.index.xxhash import term_bucket
-
-        uniq = sorted(set(terms))
-        if not uniq:
-            return self.spark.createDataFrame([], POSTINGS_SCHEMA)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in uniq})
-        pruned = self.segments.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-        )
-
-        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            out = []
-            for term, rows in pdf.groupby("term", sort=False):
-                ids, tfs = seg_mod.decode_blocks(rows)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": ids.astype("int64"),
-                            "term": term,
-                            "tf": tfs.astype("int32"),
-                        }
-                    )
-                )
-            if not out:
-                return pd.DataFrame(
-                    {"doc_id": [], "term": [], "tf": []}
-                ).astype({"doc_id": "int64", "term": "str", "tf": "int32"})
-            return pd.concat(out, ignore_index=True)
-
-        return pruned.groupBy("seg_id").applyInPandas(
-            kernel, POSTINGS_SCHEMA
-        )
-
-    def doc_lens(self) -> DataFrame:
-        """(doc_id, dl) with the Lucene-visible (quantized) lengths,
-        decoded from the stored norms."""
-        from alix_spark.search.phrase import doc_lens_from_norms
-
-        return doc_lens_from_norms(self.norms)
 
     def expand_wildcards(self, prefixes: list[str]) -> list[str]:
         """Prefix expansion against the persisted vocabulary
@@ -254,84 +209,63 @@ class IndexReader:
             parsed.wildcards = []
         return parsed
 
+    def _boolean(self, parsed, dfs: dict[str, int], k: int | None) -> DataFrame:
+        return wand_mod.boolean_topk(
+            self.segments,
+            self.norms,
+            parsed.must,
+            parsed.should,
+            parsed.must_not,
+            dfs,
+            self.n_docs,
+            self.avgdl,
+            k=k,
+            n_buckets=self.n_buckets,
+        )
+
     def boolean_docs(self, q: str) -> DataFrame:
         """ALL doc ids matching the boolean semantics of ``q`` (no
-        ranking, no k-cut) → (doc_id), served from decoded segment
-        postings — the reference's BooleanQuery match set
-        (``Alix.java:714-754``)."""
-        from alix_spark.search.boolean import matching_docs
-
-        parsed = self._parse_expanded(q)
-        decoded = self.decoded_postings(parsed.all_terms())
-        return matching_docs(
-            decoded, parsed, all_docs=self.doc_lens()
-        ).select("doc_id")
+        ranking, no k-cut) → (doc_id): the reference's BooleanQuery match
+        set (``Alix.java:714-754``), from the per-segment boolean kernel
+        of :meth:`search`."""
+        # the match set needs no scores, so no idf lookup job
+        return self._boolean(self._parse_expanded(q), {}, None).select("doc_id")
 
     # -- the query surface ----------------------------------------------
     def search(self, q: str, k: int = 10) -> DataFrame:
         """Top-k retrieval for the full +/-/* query grammar →
-        (doc_id, score), served entirely from the persisted index.
+        (doc_id, score), served entirely from the persisted index. Every
+        query shape is one cogroup of the (bucket, term)-pruned segment
+        rows with the norms, one kernel per segment, then a global top-k:
 
-        * pure OR → block-max WAND over the compressed segments
-        * MUST / MUST_NOT → boolean restriction over decoded doc sets
-          (posting-join / anti-join), positive terms then scored with
-          corpus-wide idf (``Alix.java:714-754`` semantics)
-        * ``prefix*`` → vocabulary expansion into SHOULD clauses
-        * pure-negative → all docs minus exclusions, score 0
+        * pure OR → block-max WAND (:func:`wand.wand_topk`)
+        * MUST / MUST_NOT → the boolean kernel (:func:`wand.boolean_topk`):
+          per segment, the MUST intersection (or SHOULD union) minus the
+          MUST_NOT docs, positive terms scored with corpus-wide idf
+          (``Alix.java:714-754`` semantics)
+        * ``prefix*`` → vocabulary expansion into SHOULD clauses; one
+          that expands to nothing matches nothing
+        * pure-negative → every doc with a token minus the exclusions,
+          score 0, by doc id
         """
-        from alix_spark.search import bm25 as bm25_mod
-        from alix_spark.search import wand as wand_mod
-        from alix_spark.search.boolean import matching_docs
-
         parsed = self._parse_expanded(q)
-        terms = parsed.must + parsed.should
-        if not parsed.must and not parsed.must_not:
-            if not terms:
-                if parsed.had_wildcards:
-                    # a wildcard that expanded to nothing matches
-                    # nothing — not a malformed query
-                    return (
-                        self.doc_lens()
-                        .select("doc_id")
-                        .withColumn("score", F.lit(0.0))
-                        .limit(0)
-                    )
-                raise ValueError(f"empty query: {q!r}")
-            return wand_mod.wand_topk(
-                self.segments,
-                self.norms,
-                terms,
-                self.dfs_for(terms),
-                self.n_docs,
-                self.avgdl,
-                k=k,
-                n_buckets=self.n_buckets,
-            )
-        decoded = self.decoded_postings(
-            sorted(set(terms) | set(parsed.must_not))
-        )
-        dls = self.doc_lens()
-        candidates = matching_docs(decoded, parsed, all_docs=dls)
-        if not terms:
-            # pure-negative: every surviving doc, unscored (score 0)
-            return (
-                candidates.select("doc_id")
-                .withColumn("score", F.lit(0.0))
-                .orderBy("doc_id")
-                .limit(k)
-            )
-        postings = decoded.filter(F.col("term").isin(terms)).join(
-            candidates, "doc_id", "left_semi"
-        )
-        # idf stays corpus-wide even when candidates are restricted
-        dfs = self.forms.select("term", F.col("docs").alias("df"))
-        return bm25_mod.bm25_topk(
-            postings,
-            dls,
+        terms = parsed.positive_terms
+        if not terms and not parsed.must_not:
+            if parsed.had_wildcards:
+                # a wildcard that expanded to nothing matches nothing —
+                # not a malformed query
+                return self.spark.createDataFrame([], wand_mod.TOPK_SCHEMA)
+            raise ValueError(f"empty query: {q!r}")
+        dfs = self.dfs_for(terms)
+        if parsed.must or parsed.must_not:
+            return self._boolean(parsed, dfs, k)
+        return wand_mod.wand_topk(
+            self.segments,
+            self.norms,
             terms,
+            dfs,
+            self.n_docs,
+            self.avgdl,
             k=k,
-            lucene=True,
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            dfs=dfs,
+            n_buckets=self.n_buckets,
         )

@@ -70,6 +70,7 @@ from pyspark.sql.types import (
 )
 
 from alix_spark.index import codec
+from alix_spark.index.build import reject_null_ids
 from alix_spark.search.bm25 import B, K1
 
 BLOCK = 128
@@ -424,6 +425,7 @@ def build_single_pass_from_docs(
         cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if pdf.empty:
             return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+        reject_null_ids(pdf["doc_id"], "doc_id")
         seg_id = int(pdf["seg_id"].iloc[0])
         doc_arrs, term_arrs, pos_arrs = [], [], []
         for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):

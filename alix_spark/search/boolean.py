@@ -10,6 +10,10 @@ algebra the posting-list operations become:
 * MUST_NOT→ left-anti join
 * only-MUST_NOT queries run against the full doc set
   (``MatchAllDocsQuery`` base, ``Alix.java:746-754``).
+
+This serves the ``Corpus`` DataFrame path. ``IndexReader`` computes the
+same match set per segment, as a doc mask inside its scoring kernel
+(:func:`alix_spark.search.wand.boolean_mask`).
 """
 
 from __future__ import annotations

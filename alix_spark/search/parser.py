@@ -39,9 +39,6 @@ class ParsedQuery:
     def positive_terms(self) -> list[str]:
         return self.must + self.should
 
-    def all_terms(self) -> list[str]:
-        return self.must + self.should + self.must_not
-
 
 def normalize_term(raw: str) -> str:
     """Apply the simple analysis chain to one query token."""

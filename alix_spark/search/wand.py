@@ -1,37 +1,51 @@
-"""Block-max WAND top-k over compressed posting segments.
+"""Per-segment top-k kernels over compressed posting segments.
 
-The reference gets this from Lucene 8's ``IndexSearcher`` + BM25
-(``/root/reference/java/alix/lucene/Alix.java:232,341-343``; block-max
-WAND is the Lucene 8 top-k scorer). Spark has no analogue, so this module
-implements it as a numpy kernel applied per segment:
+The reference gets ranked retrieval from Lucene 8's ``IndexSearcher`` +
+BM25 (``alix/lucene/Alix.java:232,341-343`` in the reference), which
+runs every query inside each segment, against that segment's postings
+and norms. Spark has no analogue, so this module runs one numpy kernel
+per segment, with one physical plan for every query shape:
 
 * query terms' block rows are pruned by (bucket, term) — at rest this is
   file/row-group pruning on the partitioned segment table;
 * segments are doc-id ranges, so every query term's postings for a given
   doc range are co-located in one group: a cogrouped ``applyInPandas``
-  over (postings-by-seg, norms-by-seg) runs an independent WAND per
-  segment and emits its local top-k;
+  over (postings-by-seg, norms-by-seg) runs the kernel per segment and
+  emits its local top-k;
 * global top-k = ``orderBy(score desc, doc_id asc).limit(k)`` — Spark's
   ``TakeOrderedAndProject``.
 
-Scoring matches the Lucene-faithful mode of :mod:`alix_spark.search.bm25`
-(quantized norms, float32 per-clause scores) so WAND results are
-rank-identical to both the DataFrame path and the Lucene reference.
+Two kernels plug into that plan:
 
-The WAND loop itself uses the standard block-max refinement: maintain a
-threshold = k-th best score; order terms by current doc; pick the pivot
-term where the cumulative idf*block_max_w upper bound crosses the
-threshold; if even the block-level bound can't beat the threshold, skip
-whole blocks.
+* :func:`wand_topk` — pure OR (SHOULD) queries, block-max WAND
+  (:func:`wand_segment_topk`). It keeps a threshold = k-th best score;
+  orders terms by current doc; picks the pivot term where the cumulative
+  idf*block_max_w upper bound crosses the threshold; if even the
+  block-level bound can't beat the threshold, it skips whole blocks.
+* :func:`boolean_topk` — MUST / SHOULD-under-MUST / MUST_NOT and
+  pure-negative queries (Lucene ``BooleanQuery``, ``Alix.java:714-754``),
+  exhaustive: decode each clause term once, mask the segment's docs to
+  the boolean match set (:func:`boolean_mask`), score the survivors
+  (:func:`score_segment_vectorized`). ``k=None`` returns the whole
+  match set (``IndexReader.boolean_docs``).
+
+:func:`wand_topk_batch` answers many OR queries in one pass with the
+exhaustive scorer.
+
+Scoring matches the Lucene-faithful mode of :mod:`alix_spark.search.bm25`
+(quantized norms, float32 per-clause scores, corpus-wide idf) so every
+kernel is rank-identical to both the DataFrame path and the Lucene
+reference.
 """
 
 from __future__ import annotations
 
 import heapq
+from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -41,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from alix_spark.index import codec
+from alix_spark.index import segments as seg_mod
 from alix_spark.index.xxhash import term_bucket
 from alix_spark.search.bm25 import B, K1
 
@@ -77,11 +92,9 @@ class _TermCursor:
         # per-block impact bound derived from (max_tf, min_dl): tf_w is
         # increasing in tf, decreasing in dl, so this dominates every
         # posting in the block
-        from alix_spark.index.segments import tf_weight
-
         mt = self.blocks["max_tf"].to_numpy()
         md = self.blocks["min_dl"].to_numpy()
-        self._bounds = tf_weight(mt, md, avgdl)
+        self._bounds = seg_mod.tf_weight(mt, md, avgdl)
         # suffix maxima: bound over ALL remaining blocks in O(1)
         self._suffix_max = np.maximum.accumulate(self._bounds[::-1])[::-1]
         self.bi = -1
@@ -238,6 +251,73 @@ def _fresh_norms(norms: DataFrame) -> DataFrame:
     )
 
 
+def _idfs(terms: list[str], dfs: dict[str, int], n_docs: int) -> dict[str, float]:
+    """Lucene BM25 idf of each term, from CORPUS-wide doc freqs (the forms
+    table), so idf never narrows with a boolean restriction."""
+    return {
+        t: float(np.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)))
+        for t in sorted(set(terms))
+        if t in dfs
+    }
+
+
+def _frame(schema: StructType, cols) -> pd.DataFrame:
+    """Kernel output (a dict of columns or a list of row tuples) → a pandas
+    frame typed as ``schema``, whose columns are all long or double —
+    also when it is empty."""
+    return pd.DataFrame(cols, columns=schema.fieldNames()).astype(
+        {
+            f.name: "int64" if isinstance(f.dataType, LongType) else "float64"
+            for f in schema.fields
+        }
+    )
+
+
+def _per_segment(
+    segments: DataFrame,
+    norms: DataFrame,
+    terms: list[str],
+    n_buckets: int,
+    run_seg,
+    schema: StructType,
+    every_segment: bool = False,
+) -> DataFrame:
+    """``run_seg(blocks, first_doc, norm_bytes)`` once per segment, over
+    that segment's block rows of ``terms`` and its norm row → the
+    concatenated local results.
+
+    The bucket filter prunes files/row-groups of the partitioned segment
+    table before the term filter touches rows; term_bucket is Spark's
+    pmod(xxhash64(term), n) in pure Python, so planning runs no job.
+    Segments are doc-id ranges, so the cogroup by seg_id co-locates every
+    query term's postings of a doc range with the norms of that range.
+    A segment holding none of ``terms`` yields nothing unless
+    ``every_segment`` (the pure-negative kernel matches its docs: it gets
+    an empty ``blocks``); one without a norm row has no documents."""
+    uniq = sorted(set(terms))
+    buckets = sorted({term_bucket(t, n_buckets) for t in uniq})
+    pruned = segments.filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
+    ).select(*_SCORING_COLS)  # drop positions: dead weight for scoring
+
+    def kernel(key, blocks: pd.DataFrame, pnorms: pd.DataFrame) -> pd.DataFrame:
+        if pnorms.empty or (blocks.empty and not every_segment):
+            return _frame(schema, [])
+        norm_bytes = np.frombuffer(pnorms["_norm_bytes"].iloc[0], dtype=np.uint8)
+        return run_seg(blocks, int(pnorms["_first_doc"].iloc[0]), norm_bytes)
+
+    return (
+        pruned.groupby("seg_id")
+        .cogroup(_fresh_norms(norms).groupby("_nseg"))
+        .applyInPandas(kernel, schema)
+    )
+
+
+def _global_topk(local: DataFrame, k: int) -> DataFrame:
+    # Spark's TakeOrderedAndProject; doc_id asc is Lucene's tie-break
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
 def wand_topk(
     segments: DataFrame,
     norms: DataFrame,
@@ -254,95 +334,173 @@ def wand_topk(
     :mod:`alix_spark.index.segments`; ``dfs`` are CORPUS-wide doc freqs
     (from the forms table) so idf matches the DataFrame path.
     """
-    from collections import Counter
-
-    uniq = sorted(set(terms))
     weights = dict(Counter(terms))
-    idfs = {
-        t: float(np.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)))
-        for t in uniq
-        if t in dfs
-    }
-    # the bucket filter prunes files/row-groups of the partitioned segment
-    # table before the term filter touches rows; term_bucket is Spark's
-    # pmod(xxhash64(term), n) in pure Python, so planning runs no job
-    buckets = sorted({term_bucket(t, n_buckets) for t in uniq})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-    ).select(*_SCORING_COLS)  # drop positions: dead weight for scoring
+    idfs = _idfs(terms, dfs, n_docs)
 
-    def run_seg(key, pblocks: pd.DataFrame, pnorms: pd.DataFrame) -> pd.DataFrame:
-        if pblocks.empty or pnorms.empty:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        first = int(pnorms["_first_doc"].iloc[0])
-        dl = codec.byte4_to_int(
-            np.frombuffer(pnorms["_norm_bytes"].iloc[0], dtype=np.uint8)
-        )
-        term_blocks = {t: g for t, g in pblocks.groupby("term", sort=False)}
+    def run_seg(blocks: pd.DataFrame, first: int, norm_bytes: np.ndarray):
+        term_blocks = {t: g for t, g in blocks.groupby("term", sort=False)}
         top = wand_segment_topk(
-            term_blocks, idfs, weights, first, dl, avgdl, k
+            term_blocks,
+            idfs,
+            weights,
+            first,
+            codec.byte4_to_int(norm_bytes),
+            avgdl,
+            k,
         )
-        return pd.DataFrame(top, columns=["doc_id", "score"])
+        return _frame(TOPK_SCHEMA, top)
 
-    local = (
-        pruned.groupby("seg_id")
-        .cogroup(_fresh_norms(norms).groupby("_nseg"))
-        .applyInPandas(run_seg, TOPK_SCHEMA)
-    )
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    local = _per_segment(segments, norms, terms, n_buckets, run_seg, TOPK_SCHEMA)
+    return _global_topk(local, k)
+
+
+def decode_clauses(
+    blocks: pd.DataFrame,
+    first: int,
+    dl: np.ndarray,
+    idfs: dict[str, float],
+    avgdl: float,
+) -> dict[str, tuple[np.ndarray, np.ndarray | None]]:
+    """Decode each term's block rows of one segment ONCE →
+    {term: (segment-local doc indexes, clause scores)}.
+
+    The clause score is Lucene's per-clause BM25, float64(float32(idf·w))
+    with the quantized doc length; query weights (repeated terms) apply
+    after the float32 rounding, at accumulation. A term without an idf
+    (an exclusion only) gets ``None``: only its doc set is used."""
+    out: dict[str, tuple[np.ndarray, np.ndarray | None]] = {}
+    if blocks.empty:
+        return out
+    dl_f = dl.astype(np.float64)
+    for t, rows in blocks.groupby("term", sort=False):
+        ids, tfs = seg_mod.decode_blocks(rows)
+        docs = ids.astype(np.int64) - first
+        clause = None
+        if t in idfs:
+            tf = tfs.astype(np.float64)
+            w = tf / (tf + K1 * (1.0 - B + B * dl_f[docs] / avgdl))
+            clause = (idfs[t] * w).astype(np.float32).astype(np.float64)
+        out[t] = (docs, clause)
+    return out
 
 
 def score_segment_vectorized(
-    term_blocks: dict[str, pd.DataFrame],
-    idfs: dict[str, float],
+    clauses: dict[str, tuple[np.ndarray, np.ndarray | None]],
     weights: dict[str, float],
-    norm_first: int,
-    norm_dl: np.ndarray,
-    avgdl: float,
-    k: int,
-) -> list[tuple[int, float]]:
-    """Exhaustive vectorized BM25 scoring of one segment → local top-k.
+    n_docs: int,
+    k: int | None,
+    candidates: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exhaustive vectorized BM25 scoring of one segment → (segment-local
+    doc indexes, scores) of its top-k, score desc then doc asc.
 
-    numpy end-to-end: decode each query term's blocks once, compute the
-    float32 clause scores for ALL its postings in one shot, scatter-add
-    into a dense per-segment accumulator, argpartition the top-k. For
-    Zipf-head query terms (where WAND's threshold can't prune much) this
-    is ~100× the Python-loop WAND; `wand_segment_topk` remains the
-    selective-query path and the semantics reference.
-
-    Reproduces the same float behavior as the cursor path: clause =
+    numpy end-to-end: scatter-add every weighted clause score of
+    :func:`decode_clauses` into a dense per-segment accumulator, then
+    sort. The docs ranked are ``candidates`` (a bool mask over the
+    segment's ``n_docs`` docs) when given, else every doc a clause
+    touched. ``k=None`` keeps them all. For Zipf-head query terms (where
+    WAND's threshold can't prune much) this is ~100× the Python-loop
+    WAND; `wand_segment_topk` remains the selective-query path and the
+    semantics reference — same float behavior: clause =
     float64(float32(idf * w)), summed in float64.
     """
-    acc = np.zeros(norm_dl.size, dtype=np.float64)
-    dl_f = norm_dl.astype(np.float64)
-    touched = np.zeros(norm_dl.size, dtype=bool)
-    for t, blocks in term_blocks.items():
-        if t not in idfs or blocks.empty:
+    acc = np.zeros(n_docs, dtype=np.float64)
+    touched = np.zeros(n_docs, dtype=bool)
+    for t, weight in weights.items():
+        docs, clause = clauses.get(t, (None, None))
+        if clause is None:
             continue
-        doc_parts, tf_parts = [], []
-        for r in blocks.sort_values("block_id").itertuples(index=False):
-            doc_parts.append(
-                codec.delta_decode(codec.varbyte_decode(r.doc_gaps, r.n))
-            )
-            tf_parts.append(codec.varbyte_decode(r.tfs, r.n))
-        docs = np.concatenate(doc_parts).astype(np.int64) - norm_first
-        tfs = np.concatenate(tf_parts).astype(np.float64)
-        w = tfs / (tfs + K1 * (1.0 - B + B * dl_f[docs] / avgdl))
-        clause = (idfs[t] * w).astype(np.float32).astype(np.float64)
-        clause *= weights.get(t, 1.0)
-        np.add.at(acc, docs, clause)
+        np.add.at(acc, docs, clause * weight)
         touched[docs] = True
-    idx = np.flatnonzero(touched)
-    if idx.size == 0:
-        return []
+    idx = np.flatnonzero(touched if candidates is None else candidates)
     scores = acc[idx]
     # full lexsort (score desc, doc asc) keeps boundary ties deterministic
     # — Lucene's tie-break is ascending docid; idx.size <= seg_size so the
     # sort is cheap
     order = np.lexsort((idx, -scores))[:k]
-    return [(int(idx[i] + norm_first), float(scores[i])) for i in order]
+    return idx[order], scores[order]
+
+
+def boolean_mask(
+    clauses: dict[str, tuple[np.ndarray, np.ndarray | None]],
+    must: list[str],
+    should: list[str],
+    must_not: list[str],
+    norm_bytes: np.ndarray,
+) -> np.ndarray:
+    """A BooleanQuery's match set in one segment, as a bool mask over the
+    segment's docs (``Alix.java:714-754``): the intersection of the MUST
+    doc sets; with no MUST clause, the union of the SHOULD doc sets
+    (SHOULD under MUST only scores); with no positive clause, every doc
+    with a token (norm byte nonzero — ``MatchAllDocsQuery``); in every
+    case minus the MUST_NOT doc sets. A clause term absent from the
+    segment has an empty doc set."""
+
+    def doc_set(t: str) -> np.ndarray:
+        m = np.zeros(norm_bytes.size, dtype=bool)
+        if t in clauses:
+            m[clauses[t][0]] = True
+        return m
+
+    if must:
+        mask = np.logical_and.reduce([doc_set(t) for t in set(must)])
+    elif should:
+        mask = np.logical_or.reduce([doc_set(t) for t in set(should)])
+    else:
+        mask = norm_bytes != 0
+    for t in set(must_not):
+        if t in clauses:
+            mask[clauses[t][0]] = False
+    return mask
+
+
+def boolean_topk(
+    segments: DataFrame,
+    norms: DataFrame,
+    must: list[str],
+    should: list[str],
+    must_not: list[str],
+    dfs: dict[str, int],
+    n_docs: int,
+    avgdl: float,
+    k: int | None = 10,
+    n_buckets: int = 32,
+) -> DataFrame:
+    """Distributed BooleanQuery → (doc_id, score) global top-k.
+
+    The same per-segment plan as :func:`wand_topk` — one cogroup of the
+    (bucket, term)-pruned block rows with the norms — but the kernel is
+    exhaustive: it decodes each clause term once, builds the match set
+    with :func:`boolean_mask`, and ranks it with
+    :func:`score_segment_vectorized`. Every positive clause scores
+    (``Counter`` weights for repeated terms), with corpus-wide idf from
+    ``dfs``; a pure-negative query scores 0 and ranks by doc id.
+    ``k=None`` returns every matching doc, unordered (the match set).
+    """
+    positive = must + should
+    weights = dict(Counter(positive))
+    idfs = _idfs(positive, dfs, n_docs)
+
+    def run_seg(blocks: pd.DataFrame, first: int, norm_bytes: np.ndarray):
+        clauses = decode_clauses(
+            blocks, first, codec.byte4_to_int(norm_bytes), idfs, avgdl
+        )
+        mask = boolean_mask(clauses, must, should, must_not, norm_bytes)
+        docs, scores = score_segment_vectorized(
+            clauses, weights, norm_bytes.size, k, mask
+        )
+        return _frame(TOPK_SCHEMA, {"doc_id": docs + first, "score": scores})
+
+    local = _per_segment(
+        segments,
+        norms,
+        positive + must_not,
+        n_buckets,
+        run_seg,
+        TOPK_SCHEMA,
+        every_segment=not positive,
+    )
+    return local if k is None else _global_topk(local, k)
 
 
 BATCH_SCHEMA = StructType(
@@ -364,85 +522,35 @@ def wand_topk_batch(
     k: int = 10,
     n_buckets: int = 32,
 ) -> DataFrame:
-    """Batched block-max WAND: every query of the set is answered in ONE
-    cogrouped pass over the segments → (qid, doc_id, score).
+    """Batched top-k: every query of the set is answered in ONE
+    cogrouped pass over the segments → (qid, doc_id, score, rank).
 
     This is the throughput path: stage setup, segment shuffle, and norm
     decode are paid once for the whole batch instead of per query.
     """
-    from collections import Counter
-
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    idfs = {
-        t: float(np.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)))
-        for t in all_terms
-        if t in dfs
-    }
+    idfs = _idfs(all_terms, dfs, n_docs)
     weights_by_q = {qid: dict(Counter(ts)) for qid, ts in queries.items()}
-    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
-    ).select(*_SCORING_COLS)
 
-    def run_seg(key, pblocks: pd.DataFrame, pnorms: pd.DataFrame) -> pd.DataFrame:
-        if pblocks.empty or pnorms.empty:
-            return pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-                {"qid": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        first = int(pnorms["_first_doc"].iloc[0])
-        dl = codec.byte4_to_int(
-            np.frombuffer(pnorms["_norm_bytes"].iloc[0], dtype=np.uint8)
+    def run_seg(blocks: pd.DataFrame, first: int, norm_bytes: np.ndarray):
+        # each term is decoded and scored ONCE for the whole batch — terms
+        # shared across queries would otherwise be decoded per query
+        clauses = decode_clauses(
+            blocks, first, codec.byte4_to_int(norm_bytes), idfs, avgdl
         )
-        dl_f = dl.astype(np.float64)
-        # decode each term's blocks and compute its (unweighted) clause
-        # scores ONCE for the whole batch — terms shared across queries
-        # would otherwise be decoded and scored per query. Same float
-        # behavior as score_segment_vectorized: f64(f32(idf*w)), with the
-        # query weight applied after the f32 rounding.
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, blocks in pblocks.groupby("term", sort=False):
-            if t not in idfs:
-                continue
-            doc_parts, tf_parts = [], []
-            for r in blocks.sort_values("block_id").itertuples(index=False):
-                doc_parts.append(
-                    codec.delta_decode(codec.varbyte_decode(r.doc_gaps, r.n))
-                )
-                tf_parts.append(codec.varbyte_decode(r.tfs, r.n))
-            docs = np.concatenate(doc_parts).astype(np.int64) - first
-            tfs = np.concatenate(tf_parts).astype(np.float64)
-            w = tfs / (tfs + K1 * (1.0 - B + B * dl_f[docs] / avgdl))
-            clause = (idfs[t] * w).astype(np.float32).astype(np.float64)
-            decoded[t] = (docs, clause)
         out = []
-        for qid, terms in queries.items():
-            q_terms = [t for t in set(terms) if t in decoded]
-            if not q_terms:
-                continue
-            acc = np.zeros(dl.size, dtype=np.float64)
-            touched = np.zeros(dl.size, dtype=bool)
-            wq = weights_by_q[qid]
-            for t in q_terms:
-                docs, clause = decoded[t]
-                np.add.at(acc, docs, clause * wq.get(t, 1.0))
-                touched[docs] = True
-            idx = np.flatnonzero(touched)
-            if idx.size == 0:
-                continue
-            scores = acc[idx]
-            order = np.lexsort((idx, -scores))[:k]
-            out.extend(
-                (qid, int(idx[i] + first), float(scores[i])) for i in order
+        for qid, weights in weights_by_q.items():
+            docs, scores = score_segment_vectorized(
+                clauses, weights, norm_bytes.size, k
             )
-        return pd.DataFrame(out, columns=["qid", "doc_id", "score"])
+            out.extend(
+                (qid, int(d) + first, float(s)) for d, s in zip(docs, scores)
+            )
+        return _frame(BATCH_SCHEMA, out)
 
-    local = (
-        pruned.groupby("seg_id")
-        .cogroup(_fresh_norms(norms).groupby("_nseg"))
-        .applyInPandas(run_seg, BATCH_SCHEMA)
+    local = _per_segment(
+        segments, norms, all_terms, n_buckets, run_seg, BATCH_SCHEMA
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("_rank", F.row_number().over(w))

@@ -150,7 +150,9 @@ class StreamingIndexer:
         """(docs, segments, norms) of the CURRENT version; empty frames
         with the right schemas before the first publish. Each table is a
         single multi-path parquet scan over exactly the file groups its
-        manifest references — no version-copy is ever materialized."""
+        manifest references — no version-copy is ever materialized. The
+        scans carry the tables' known schemas, so opening them runs no
+        footer-inference job."""
         # NOTE on manifest size: one entry per (table, segment). The
         # inline mode (segs_per_shard=None) holds them in one JSON —
         # readable to ~10^6 segments. Beyond that, construct with
@@ -170,7 +172,7 @@ class StreamingIndexer:
                 f"{self.index_dir}/{rel}" for rel in man["tables"][t].values()
             ]
             if paths:
-                out.append(self.spark.read.parquet(*paths))
+                out.append(self.spark.read.schema(schemas[t]).parquet(*paths))
             else:
                 out.append(self.spark.createDataFrame([], schemas[t]))
         return tuple(out)

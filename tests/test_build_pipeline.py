@@ -177,6 +177,19 @@ def test_reader_rank_identity(spark, built_index):
             assert math.isclose(gs, es, rel_tol=1e-5, abs_tol=1e-6)
 
 
+@pytest.mark.parametrize("case", GOLDEN, ids=[g["q"] for g in GOLDEN])
+def test_reader_lucene_golden(spark, built_index, case):
+    """Every Lucene golden query — OR, MUST, SHOULD under MUST, MUST_NOT,
+    repeated terms — served by IndexReader from the CLI-built index, with
+    the tolerance of the Corpus rank-identity gate. The CLI keeps the
+    input doc ids, so they are the golden's."""
+    r = IndexReader(spark, built_index)
+    got = [(x["doc_id"], x["score"]) for x in r.search(case["q"], 10).collect()]
+    exp = [(int(d), float(s)) for d, s in case["topk"]]
+    assert [d for d, _ in got] == [d for d, _ in exp], (case["q"], got, exp)
+    for (gd, gs), (_, es) in zip(got, exp):
+        assert math.isclose(gs, es, rel_tol=1e-5, abs_tol=1e-6), (case["q"], gd)
+
 
 def _rows(df, key: list[str]) -> list[tuple]:
     """Every row of a table, binary columns as bytes, in key order."""

@@ -167,3 +167,108 @@ def test_doc_sort_options_and_id_resolution(spark):
     assert c.id_for(3, "path") == "zz.txt"
     assert c.doc_id_for("nope.txt", "path") is None
     assert c.id_for(99, "path") is None
+
+
+def _ranked(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _assert_same_ranking(got, exp, q):
+    assert [d for d, _ in got] == [d for d, _ in exp], q
+    for (_, gs), (_, es) in zip(got, exp):
+        assert abs(gs - es) < 1e-6, q
+
+
+@pytest.mark.parametrize(
+    "q, k",
+    [
+        ("-fast", 10),  # pure negative: every doc with a token, score 0
+        ("-fast -join", 1000),  # k above the match count
+        ("+fast +zzzyx", 10),  # MUST term missing from the vocabulary
+        ("fast join -zzzyx", 10),  # MUST_NOT term missing from it
+        ("+fast +fast", 10),  # a repeated MUST term scores twice
+        ("+fast +fast join", 10),
+        ("+fast +join -window", 1000),
+        ("+merge -scan sort*", 10),  # wildcard SHOULD under MUST
+    ],
+)
+def test_boolean_kernel_edge_cases_match_corpus(q, k, corpus, persisted):
+    exp = _ranked(corpus.search(q, k=k, lucene=True))
+    got = _ranked(persisted.search(q, k=k))
+    _assert_same_ranking(got, exp, q)
+    if k > 10:  # the k-above-match-count cases
+        assert len(got) < k, q
+
+
+@pytest.fixture(scope="module")
+def sparse_terms(spark, tmp_path_factory):
+    """40 docs in 5 segments of 8: ``alpha`` only in segment 0, ``beta``
+    only in segment 2 and ``gamma`` in segments 0 and 2, so most
+    segments' cogroup groups hold no postings of a query's terms and a
+    pure-negative query sees segments with no posting rows at all."""
+
+    def text(d):
+        words = ["filler", f"w{d}"]
+        if d < 8:
+            words += ["alpha"] * (1 + d % 3)
+        if 16 <= d < 24:
+            words.append("beta")
+        if d in (3, 5, 17, 20):
+            words.append("gamma")
+        return " ".join(words)
+
+    docs = spark.createDataFrame(
+        [(d, text(d)) for d in range(40)], "doc_id long, text string"
+    )
+    out = tmp_path_factory.mktemp("sparse_idx")
+    segs, norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, text_col="text", seg_size=8)
+    )
+    segs.write.parquet(str(out / "segments"))
+    norms.write.parquet(str(out / "norms"))
+    reader = IndexReader.from_tables(
+        spark,
+        spark.read.parquet(str(out / "segments")),
+        spark.read.parquet(str(out / "norms")),
+    )
+    return Corpus(docs, text_col="text", cache=False), reader
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "+alpha beta",
+        "+gamma alpha -beta",
+        "alpha beta -gamma",
+        "+beta -alpha",
+        "+alpha +beta",  # disjoint MUST sets: empty
+        "-gamma",
+        "-alpha -beta",
+    ],
+)
+def test_boolean_kernel_on_segments_without_query_postings(q, sparse_terms):
+    from alix_spark.search.boolean import matching_docs
+
+    corpus, reader = sparse_terms
+    exp = _ranked(corpus.search(q, k=50, lucene=True))
+    _assert_same_ranking(_ranked(reader.search(q, k=50)), exp, q)
+    exp_docs = _docs(
+        matching_docs(corpus.postings, corpus.parse(q), all_docs=corpus.doc_lens)
+    )
+    assert _docs(reader.boolean_docs(q)) == exp_docs, q
+
+
+def test_boolean_plans_are_one_cogroup_without_joins(persisted):
+    """MUST / MUST_NOT run the OR path's physical plan: one cogroup of the
+    pruned segment rows with the norms — no per-term decode stage, no
+    join or anti-join, no all-docs norm decode (MapInPandas)."""
+    for df in (
+        persisted.search("+fast join -window", k=10),
+        persisted.boolean_docs("+fast join -window"),
+        persisted.search("-fast", k=10),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert "Join" not in plan, plan
+        assert "MapInPandas" not in plan, plan

@@ -5,6 +5,7 @@ change)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from alix_spark.analysis import simple
@@ -76,3 +77,26 @@ def test_postings_map_side_plan_has_no_exchange(spark):
         .toString()
     )
     assert "Exchange" not in plan
+
+
+def test_null_doc_id_is_a_typed_error(spark):
+    """A null document id fails the map-side kernels with a ValueError
+    that names the id column, not with whatever ``int()`` of the null
+    (NaN in the Arrow batch) raises deep inside the kernel."""
+    from pyspark.errors import PythonException
+
+    from alix_spark.index import segments as seg_mod
+
+    docs = spark.createDataFrame(
+        [(1, "fast join"), (None, "slow merge")], "id long, text string"
+    )
+    with pytest.raises(
+        PythonException, match="ValueError: null document id in column 'id'"
+    ):
+        ib.build_postings_from_docs(docs, "id", "text").collect()
+    with pytest.raises(
+        PythonException, match="ValueError: null document id in column 'doc_id'"
+    ):
+        seg_mod.build_single_pass_from_docs(
+            docs.withColumnRenamed("id", "doc_id"), text_col="text", seg_size=8
+        ).collect()

@@ -616,3 +616,25 @@ def test_legacy_sharded_manifest_forces_full_rewrite(spark, tmp_path):
     rd = IndexReader.open_streaming(spark, ix2.index_dir)
     assert rd.search("fast join", k=5).count() == 5
     assert "updated" in {r["term"] for r in rd.forms.select("term").collect()}
+
+
+def test_load_tables_runs_no_job(spark, tmp_path):
+    """The manifest's tables are read with their known schemas: opening
+    them (and asking their schemas) runs no footer-inference job, and the
+    schemas equal what Spark infers from the files."""
+    ix = StreamingIndexer(spark, str(tmp_path / "sidx"), seg_size=8)
+    ix.process_batch(_rows(spark, [
+        ("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i} fast join")
+        for i in range(20)]), 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-load-tables", "load_tables")
+    try:
+        schemas = [t.schema for t in ix.load_tables()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test-load-tables")) == []
+    man = ix.read_manifest()
+    for table, schema in zip(("docs", "segments", "norms"), schemas):
+        paths = [f"{ix.index_dir}/{rel}" for rel in man["tables"][table].values()]
+        assert schema == spark.read.parquet(*paths).schema, table
