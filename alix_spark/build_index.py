@@ -190,6 +190,12 @@ def main(argv: list[str] | None = None) -> int:
                 "avgdl": avgdl,
                 "seg_size_final": seg_size,
                 "buckets": args.buckets,
+                # the parallelism the build ran at (bucket count above is
+                # index layout; these two are the build host's)
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
+                "cores": spark.sparkContext.defaultParallelism,
                 "final_segments": "segments0",
                 "final_norms": "norms0",
             }

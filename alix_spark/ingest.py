@@ -63,7 +63,7 @@ def scalable_row_number(
     """
     n_part = max(
         2,
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")) // 2,
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 2,
     )
     ordered = df.repartitionByRange(n_part, *order_cols).sortWithinPartitions(
         *order_cols
@@ -186,6 +186,6 @@ def synthesize_code_corpus(
             )
 
     base = spark.range(n_docs).repartition(
-        max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+        max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
     )
     return add_sha256(base.mapInPandas(gen, schema))

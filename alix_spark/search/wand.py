@@ -326,7 +326,7 @@ def wand_topk(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    n_buckets: int = 32,
+    n_buckets: int = seg_mod.DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Distributed block-max WAND → (doc_id, score) global top-k.
 
@@ -464,7 +464,7 @@ def boolean_topk(
     n_docs: int,
     avgdl: float,
     k: int | None = 10,
-    n_buckets: int = 32,
+    n_buckets: int = seg_mod.DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Distributed BooleanQuery → (doc_id, score) global top-k.
 
@@ -520,7 +520,7 @@ def wand_topk_batch(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    n_buckets: int = 32,
+    n_buckets: int = seg_mod.DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Batched top-k: every query of the set is answered in ONE
     cogrouped pass over the segments → (qid, doc_id, score, rank).

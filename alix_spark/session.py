@@ -1,9 +1,16 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Defaults here are the ones that matter at 100 TB just as much as on
-``local[32]``: AQE on (runtime coalescing + skew-join splitting for the
-Zipf-skewed term joins), Arrow on (every analysis kernel is a pandas UDF),
-and a shuffle-partition count that callers override per data size.
+The defaults hold on any core count: AQE on (runtime coalescing +
+skew-join splitting for the Zipf-skewed term joins), Arrow on (every
+analysis kernel is a pandas UDF), and one shuffle partition per core of
+the session (``defaultParallelism``): a small commit on ``local[4]``
+runs 4-task write stages, and a wider host gets wider stages.
+
+A default is applied only when ``get_spark`` creates the session, and
+only to keys the launcher (``spark-submit --conf``, ``spark-defaults.conf``,
+``PYSPARK_SUBMIT_ARGS``) has not set. A running session keeps the
+settings it was created with; the caller's ``shuffle_partitions`` and
+``extra_conf`` are the only settings ``get_spark`` applies to it.
 """
 
 from __future__ import annotations
@@ -11,11 +18,13 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ALIX_SHUFFLE_PARTITIONS", "32"))
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 # Scan-split parallelism floor. Spark's default is the session's core
 # count, which shreds small index tables (a 4 MB postings parquet) into
 # one split per file purely to satisfy the floor — every downstream job
@@ -26,7 +35,7 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("ALIX_SHUFFLE_PARTITIONS", "32")
 # feeds a CPU-heavy map that needs more tasks than byte sizing gives.
 DEFAULT_MIN_PARTITION_NUM = os.environ.get("ALIX_MIN_PARTITION_NUM", "4")
 # Driver JVM heap. In local mode the driver IS the executor: the Spark
-# default of 1g left 32 concurrent tasks sharing ~430 MB of unified
+# default of 1g left every concurrent task sharing ~430 MB of unified
 # execution+storage memory (guide §5) — constant GC pressure and cache
 # eviction on any non-trivial corpus. Must be set before the JVM
 # launches, so it lives here, not in per-job conf. Override per
@@ -43,26 +52,43 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster it is supplied by spark-submit and must be left None.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (every core when
+    unset); on a real cluster it is supplied by spark-submit and must be
+    left None. ``shuffle_partitions`` and ``extra_conf`` always apply; on
+    a running session only their runtime SQL settings take effect.
     """
-    builder = SparkSession.builder.appName(app_name)
+    chosen = {}
+    if shuffle_partitions:
+        chosen[SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    chosen.update(extra_conf or {})
+    if SparkContext._active_spark_context is not None:
+        spark = SparkSession.builder.config(map=chosen).getOrCreate()
+    else:
+        spark = _create_session(app_name, master, chosen)
+    _warm_python_workers(spark)
+    return spark
+
+
+def _create_session(app_name: str, master: str | None, chosen: dict) -> SparkSession:
     if master is None and not os.environ.get("SPARK_MASTER_SET"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if master:
-        builder = builder.master(master)
-    conf = {
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    # attach to the launcher's driver JVM (spark-submit), or launch one
+    # with the settings that only take effect at JVM start (the driver
+    # heap); the JVM's spark.* system properties are then what the
+    # launcher set
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll(
+            {"spark.driver.memory": DEFAULT_DRIVER_MEMORY, **chosen}.items()
+        )
+    )
+    launched = SparkConf()
+    defaults = {
         # AQE: runtime partition coalescing + automatic skew-join splitting.
         # Term-keyed shuffles are Zipf-skewed by nature (SURVEY.md §7.4).
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.files.minPartitionNum": DEFAULT_MIN_PARTITION_NUM,
-        "spark.driver.memory": DEFAULT_DRIVER_MEMORY,
         # All analysis kernels are Arrow-vectorized pandas UDFs.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
@@ -71,12 +97,17 @@ def get_spark(
         "spark.driver.maxResultSize": "2g",
         "spark.ui.enabled": "false",
     }
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
+    conf = {k: v for k, v in defaults.items() if not launched.contains(k)}
+    conf.update(chosen)
+    builder = SparkSession.builder.appName(app_name).config(map=conf)
+    if master:
+        builder = builder.master(master)
     spark = builder.getOrCreate()
-    _warm_python_workers(spark)
+    # no one set the shuffle width: one partition per core of the session
+    if not spark.sparkContext.getConf().contains(SHUFFLE_PARTITIONS):
+        spark.conf.set(
+            SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism)
+        )
     return spark
 
 
@@ -87,7 +118,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
     """Boot the Python worker pool once per application.
 
     The first pandas-UDF stage of a fresh session pays daemon fork +
-    pandas/numpy import in every worker (~2-3 s wall on 32 cores) —
+    pandas/numpy import in every worker (seconds of wall time) —
     charged to whatever query happens to run first. Warming at session
     creation is infrastructure startup, the moral equivalent of JIT
     warmup: no input data is read and no query result is computed or

@@ -41,7 +41,7 @@ def doc_buckets(
     total = j.agg(F.sum("dl")).collect()[0][0] or 1
     n_part = max(
         2,
-        int(j.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")) // 2,
+        int(j.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 2,
     )
     ordered = j.repartitionByRange(
         n_part, F.asc("_axis"), F.asc("doc_id")

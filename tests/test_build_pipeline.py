@@ -79,6 +79,10 @@ def built_index(spark, src_docs, build_plans, tmp_path_factory):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(BuildContext, "run_stage", traced)
         assert build_index.main(_cli_args(src_docs, out)) == 0
+    # the build ran at the test session's width (local[8], 8 partitions),
+    # not at defaults its own get_spark call would have applied
+    meta = json.loads(next((Path(out) / "_meta").glob("*.json")).read_text())
+    assert (meta["shuffle_partitions"], meta["cores"]) == (8, 8)
     return out
 
 

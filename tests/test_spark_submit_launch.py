@@ -8,6 +8,7 @@ IndexReader and serves ranked/boolean/phrase queries from it.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -51,6 +52,11 @@ def test_spark_submit_py_files_build_and_query(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "INDEX BUILT: 300 docs" in proc.stdout
+
+    # the launcher's --conf holds: get_spark's defaults do not replace it
+    meta = json.loads(next((out / "_meta").glob("*.json")).read_text())
+    assert meta["shuffle_partitions"] == 4
+    assert meta["cores"] == 2
 
     from alix_spark.index.reader import IndexReader
 
