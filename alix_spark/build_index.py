@@ -29,6 +29,17 @@ run only where segments really arrive over time, in
 round-0 names, so indexes and tools that read ``segments0``/``norms0``
 as the encoding stage still do.
 
+Stage widths: every exchange runs at the session's shuffle width
+(``spark.sql.shuffle.partitions``, which ``get_spark`` sizes to the
+session's cores), never at ``--buckets``. ``--buckets`` is index
+layout only: ``segments0`` is hash-partitioned by ``bucket`` at the
+session's width, so each ``bucket=`` dir still gets exactly one file,
+and ``offsets`` is range-partitioned by ``doc_id`` at the same width.
+
+Each stage runs only its own work (see :mod:`alix_spark.index.lineage`):
+its lineage record comes from the written files, and ``_meta``,
+``_lineage_table`` and ``_metrics`` are written by the driver.
+
 The final segment/norm tables + forms are everything the WAND query path
 needs (see alix_spark.search.wand / alix_spark.index.reader).
 """
@@ -36,6 +47,7 @@ needs (see alix_spark.search.wand / alix_spark.index.reader).
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -76,11 +88,13 @@ def main(argv: list[str] | None = None) -> int:
     from alix_spark.analysis import simple
     from alix_spark.index import build as ib
     from alix_spark.index import segments as seg_mod
-    from alix_spark.index.lineage import BuildContext
+    from alix_spark.index.lineage import BuildContext, write_driver_table
 
     spark = get_spark(app_name="alix-build-index", master=args.master)
     t_start = time.time()
     ctx = BuildContext(spark, args.out)
+    # the session's shuffle width: what every stage's exchange runs at
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     seg_size = args.seg_size * args.merge_group**args.merge_rounds
 
     if args.synth:
@@ -93,7 +107,6 @@ def main(argv: list[str] | None = None) -> int:
     # so re-running into the same --out with other parameters re-runs the
     # stages they change instead of reusing stale tables
     fp = f"{fp}|text_col={args.text_col}"
-    fp_offsets = f"{fp}|buckets={args.buckets}"
     fp_segments = f"{fp}|seg_size={seg_size}|buckets={args.buckets}"
     fp_norms = f"{fp}|seg_size={seg_size}"
 
@@ -114,7 +127,7 @@ def main(argv: list[str] | None = None) -> int:
         return docs
 
     docs = ctx.run_stage("docs", fp, build_docs)
-    n_docs_total = docs.count()
+    n_docs_total = ctx.record("docs")["rows"]
 
     # a posting row depends only on its own document: the map-side
     # kernel tokenizes each Arrow batch and writes finished rows, with
@@ -137,9 +150,9 @@ def main(argv: list[str] | None = None) -> int:
     # doc-range read prunes on parquet stats.
     ctx.run_stage(
         "offsets",
-        fp_offsets,
+        fp,
         lambda: simple.token_offsets(docs, "doc_id", args.text_col)
-        .repartitionByRange(args.buckets, F.col("doc_id"))
+        .repartitionByRange(width, F.col("doc_id"))
         .sortWithinPartitions("doc_id", "pos"),
     )
 
@@ -151,9 +164,10 @@ def main(argv: list[str] | None = None) -> int:
     # corpus-sized exchange, encoded at the final size. Its norm rows are
     # dropped, so the table holds one leaf dir per bucket: the default 32
     # stay within Spark's 32-path parallel-listing threshold, and opening
-    # the table lists files on the driver, with no listing job. One file
-    # per bucket dir because the file-commit count is a serial cost and a
-    # query-side open cost.
+    # the table lists files on the driver, with no listing job. The write
+    # hash-partitions by bucket at the session's width, so every bucket
+    # dir gets one file (the file-commit count is a serial cost and a
+    # query-side open cost) without one task per bucket.
     ctx.run_stage(
         "segments0",
         fp_segments,
@@ -164,7 +178,7 @@ def main(argv: list[str] | None = None) -> int:
             n_buckets=args.buckets,
         )
         .filter(F.col("term") != seg_mod.NORM_MARKER)
-        .repartition(args.buckets, F.col("bucket")),
+        .repartition(width, F.col("bucket")),
         partition_by=["bucket"],
     )
     # norms0 from the (one row per doc) doc_lens table, not the corpus;
@@ -181,26 +195,26 @@ def main(argv: list[str] | None = None) -> int:
         ),
     )
 
-    # meta + consolidated lineage/metrics
-    spark.createDataFrame(
-        [
-            {
-                "n_docs": n_docs_total,
-                "n_docs_with_tokens": n_docs,
-                "avgdl": avgdl,
-                "seg_size_final": seg_size,
-                "buckets": args.buckets,
-                # the parallelism the build ran at (bucket count above is
-                # index layout; these two are the build host's)
-                "shuffle_partitions": int(
-                    spark.conf.get("spark.sql.shuffle.partitions")
-                ),
-                "cores": spark.sparkContext.defaultParallelism,
-                "final_segments": "segments0",
-                "final_norms": "norms0",
-            }
-        ]
-    ).coalesce(1).write.mode("overwrite").json(f"{args.out}/_meta")
+    # meta + consolidated lineage/metrics, written by the driver in the
+    # layout of a one-partition Spark write
+    meta = {
+        "n_docs": n_docs_total,
+        "n_docs_with_tokens": n_docs,
+        "avgdl": avgdl,
+        "seg_size_final": seg_size,
+        "buckets": args.buckets,
+        # the parallelism the build ran at (bucket count above is index
+        # layout; these two are the build host's)
+        "shuffle_partitions": width,
+        "cores": spark.sparkContext.defaultParallelism,
+        "final_segments": "segments0",
+        "final_norms": "norms0",
+    }
+    write_driver_table(
+        f"{args.out}/_meta",
+        "part-00000.json",
+        (json.dumps(meta, sort_keys=True, separators=(",", ":")) + "\n").encode(),
+    )
     ctx.write_tables()
 
     wall = time.time() - t_start

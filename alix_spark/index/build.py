@@ -221,17 +221,24 @@ def build_forms(postings: DataFrame, assign_ids: bool = True) -> DataFrame:
     return rank_forms(stats)
 
 
+FORMS_SCHEMA = "form_id long, term string, occs long, docs long"
+
+
 def rank_forms(stats: DataFrame) -> DataFrame:
     """Assign dense freq-ordered 1-based form ids (formId 0 is reserved
     for the punctuation/hole pseudo-form) without a single-partition
     window — see :func:`alix_spark.ingest.scalable_row_number`."""
-    from alix_spark.ingest import scalable_row_number
+    from pyspark import StorageLevel
+
+    from alix_spark.ingest import scalable_row_number, scoped_persist
 
     # cache the (vocabulary-sized) stats: the range partitioner's
     # sampling pass and the exchange map stage otherwise each
-    # re-evaluate the upstream postings aggregation
+    # re-evaluate the upstream postings aggregation. A build stage
+    # unpersists it once its write has committed.
+    stats = scoped_persist(stats, StorageLevel.MEMORY_AND_DISK_DESER)
     return scalable_row_number(
-        stats.cache(), [F.desc("occs"), F.asc("term")], "form_id", start=1
+        stats, [F.desc("occs"), F.asc("term")], "form_id", start=1
     ).select("form_id", "term", "occs", "docs")
 
 

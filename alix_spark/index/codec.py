@@ -22,37 +22,36 @@ import numpy as np
 # ---------------------------------------------------------------------- #
 
 
-def varbyte_encode(values: np.ndarray) -> bytes:
+def varbyte_encode(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Encode a non-negative int array as variable-byte (7 bits/byte,
-    high bit = continuation)."""
+    little-endian groups, high bit = continuation) in one vectorized
+    pass.
+
+    Returns ``(buf, offsets)``: ``offsets`` has ``len(values) + 1``
+    entries and value ``i`` occupies ``buf[offsets[i]:offsets[i + 1]]``,
+    so the encoding of any run of values is one slice — the segment
+    encoder varbytes a whole segment's column at once and cuts the
+    per-block buffers out of it."""
     v = np.asarray(values, dtype=np.uint64)
+    offsets = np.zeros(v.size + 1, dtype=np.int64)
     if v.size == 0:
-        return b""
-    # number of bytes per value: ceil(bits/7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        mask = tmp > 0
-        if not mask.any():
-            break
-        nbits[mask] += 1
-        tmp >>= np.uint64(7)
-    nbits[nbits == 0] = 1
-    total = int(nbits.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    pos = np.concatenate(([0], np.cumsum(nbits)[:-1]))
-    # write little-endian 7-bit groups, continuation bit on all but last
-    max_len = int(nbits.max())
-    rem = v.copy()
-    for i in range(max_len):
-        mask = nbits > i
-        idx = pos[mask] + i
-        byte = (rem[mask] & np.uint64(0x7F)).astype(np.uint8)
-        is_last = nbits[mask] == i + 1
-        byte = np.where(is_last, byte, byte | 0x80)
-        out[idx] = byte
-        rem[mask] >>= np.uint64(7)
-    return out.tobytes()
+        return b"", offsets
+    # bytes per value: ceil(bits/7), min 1
+    nbytes = np.ones(v.size, dtype=np.int64)
+    vmax = int(v.max())
+    shift = 7
+    while shift < 64 and vmax >> shift:
+        nbytes += v >= np.uint64(1 << shift)
+        shift += 7
+    np.cumsum(nbytes, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    starts = offsets[:-1]
+    for i in range(shift // 7):
+        live = np.flatnonzero(nbytes > i) if i else slice(None)
+        byte = ((v[live] >> np.uint64(7 * i)) & np.uint64(0x7F)).astype(np.uint8)
+        more = nbytes[live] > i + 1
+        out[starts[live] + i] = byte | (more.astype(np.uint8) << 7)
+    return out.tobytes(), offsets
 
 
 def varbyte_decode(buf: bytes, n: int | None = None) -> np.ndarray:

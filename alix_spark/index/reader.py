@@ -25,6 +25,9 @@ jar in tests/test_lucene_rank_identity.py.
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,18 +60,34 @@ def expand_prefixes(
     return out
 
 
+def read_meta(index_dir: str) -> dict:
+    """The build's ``_meta`` record, parsed on the driver (one JSON line
+    in the ``_meta/part-*.json`` file)."""
+    part = next(Path(index_dir, "_meta").glob("part-*.json"))
+    return json.loads(part.read_text().splitlines()[0])
+
+
 class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
-        meta_rows = spark.read.json(f"{index_dir}/_meta").collect()
-        meta = meta_rows[0].asDict()
+        """Open a built index with no Spark job: ``_meta`` is parsed on
+        the driver and every table is read with its known schema (the
+        docs table's is the build's lineage record), so no footer
+        inference runs."""
+        from alix_spark.index import segments as seg_mod
+        from alix_spark.index.build import FORMS_SCHEMA
+        from alix_spark.index.lineage import read_table, stage_schema
+
+        meta = read_meta(index_dir)
+
+        def table(name: str, schema) -> DataFrame:
+            return read_table(spark, f"{index_dir}/{name}", schema)
+
         self._init_tables(
             spark,
-            segments=spark.read.parquet(
-                f"{index_dir}/{meta['final_segments']}"
-            ),
-            norms=spark.read.parquet(f"{index_dir}/{meta['final_norms']}"),
-            docs=spark.read.parquet(f"{index_dir}/docs"),
-            forms=spark.read.parquet(f"{index_dir}/forms"),
+            segments=table(meta["final_segments"], seg_mod.SEGMENT_SCHEMA),
+            norms=table(meta["final_norms"], seg_mod.NORMS_SCHEMA),
+            docs=table("docs", stage_schema(index_dir, "docs")),
+            forms=table("forms", FORMS_SCHEMA),
             n_buckets=int(meta["buckets"]),
             n_docs=int(meta["n_docs_with_tokens"]),
             avgdl=float(meta["avgdl"]),

@@ -123,53 +123,83 @@ def block_bound_w(max_tf, min_dl, avgdl: float) -> float:
     return float(tf_weight(max_tf, min_dl, avgdl))
 
 
-def _encode_term_blocks(
-    term: str,
-    bucket: int,
+def _empty_segment_frame() -> pd.DataFrame:
+    return pd.DataFrame(
+        {f.name: pd.Series(dtype=object) for f in SEGMENT_SCHEMA.fields}
+    )
+
+
+def encode_blocks(
     seg_id: int,
+    terms,
+    buckets,
+    term_starts: np.ndarray,
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dl_q: np.ndarray,
     pos_deltas: np.ndarray | None = None,
-) -> list[tuple]:
-    """One term's postings (sorted by doc) → block rows.
+) -> pd.DataFrame:
+    """One segment's postings → its block rows, every block at once.
 
-    ``pos_deltas``: occurrence-aligned per-doc delta-encoded positions
-    (length == tfs.sum()); None builds a positions-free segment.
+    The postings are grouped by term (``term_starts[i]`` is where term
+    ``i``'s run starts; ``terms``/``buckets`` are per run) and sorted by
+    doc within a term. ``pos_deltas``: occurrence-aligned per-doc
+    delta-encoded positions (length == tfs.sum()); None builds a
+    positions-free segment.
+
+    Each column is varbyte-encoded in one pass over the whole segment —
+    doc gaps (restarting at every block's first doc), tfs, positions —
+    and each block's buffer is a slice at the codec's byte offsets; the
+    block maxima/minima/sums are ``reduceat``s over the block starts.
     """
-    rows = []
-    occ_bounds = None
-    if pos_deltas is not None:
-        occ_bounds = np.concatenate(
-            ([0], np.cumsum(np.asarray(tfs, dtype=np.int64)))
-        ).astype(np.int64)
-    for b0 in range(0, doc_ids.size, BLOCK):
-        d = doc_ids[b0 : b0 + BLOCK]
-        t = tfs[b0 : b0 + BLOCK]
-        dl = dl_q[b0 : b0 + BLOCK]
-        if pos_deltas is None:
-            pos_buf = b""
-        else:
-            lo, hi = occ_bounds[b0], occ_bounds[min(b0 + BLOCK, doc_ids.size)]
-            pos_buf = codec.varbyte_encode(pos_deltas[lo:hi])
-        rows.append(
-            (
-                bucket,
-                seg_id,
-                term,
-                b0 // BLOCK,
-                int(d.size),
-                codec.varbyte_encode(codec.delta_encode(d)),
-                codec.varbyte_encode(t),
-                int(d[0]),
-                int(d[-1]),
-                int(t.max()),
-                int(dl.min()),
-                int(t.sum()),
-                pos_buf,
-            )
-        )
-    return rows
+    n_post = doc_ids.size
+    if n_post == 0:
+        return _empty_segment_frame()
+    d = np.asarray(doc_ids, dtype=np.uint64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dl_q = np.asarray(dl_q, dtype=np.int64)
+    term_starts = np.asarray(term_starts, dtype=np.int64)
+    run_lens = np.diff(np.append(term_starts, n_post))
+    # block k of a term covers its postings [k·BLOCK, (k+1)·BLOCK)
+    in_term = np.arange(n_post) - np.repeat(term_starts, run_lens)
+    b_start = np.flatnonzero(in_term % BLOCK == 0)
+    b_end = np.append(b_start[1:], n_post)
+    b_term = np.repeat(np.arange(term_starts.size), (run_lens + BLOCK - 1) // BLOCK)
+
+    gaps = np.empty_like(d)
+    gaps[0] = d[0]
+    gaps[1:] = d[1:] - d[:-1]
+    gaps[b_start] = d[b_start]
+    gap_buf, gap_off = codec.varbyte_encode(gaps)
+    tf_buf, tf_off = codec.varbyte_encode(tfs)
+
+    def cut(buf: bytes, lo: np.ndarray, hi: np.ndarray) -> list[bytes]:
+        return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
+
+    if pos_deltas is None:
+        positions = [b""] * b_start.size
+    else:
+        occ = np.concatenate(([0], np.cumsum(tfs)))
+        pos_buf, pos_off = codec.varbyte_encode(pos_deltas)
+        positions = cut(pos_buf, pos_off[occ[b_start]], pos_off[occ[b_end]])
+
+    return pd.DataFrame(
+        {
+            "bucket": np.asarray(buckets, dtype=np.int64)[b_term],
+            "seg_id": np.full(b_start.size, seg_id, dtype=np.int64),
+            "term": np.asarray(terms, dtype=object)[b_term],
+            "block_id": in_term[b_start] // BLOCK,
+            "n": b_end - b_start,
+            "doc_gaps": cut(gap_buf, gap_off[b_start], gap_off[b_end]),
+            "tfs": cut(tf_buf, tf_off[b_start], tf_off[b_end]),
+            "first_doc": d[b_start].astype(np.int64),
+            "last_doc": d[b_end - 1].astype(np.int64),
+            "max_tf": np.maximum.reduceat(tfs, b_start),
+            "min_dl": np.minimum.reduceat(dl_q, b_start),
+            "sum_tf": np.add.reduceat(tfs, b_start),
+            "positions": positions,
+        }
+    )
 
 
 def build_segments(
@@ -199,21 +229,17 @@ def build_segments(
         seg_id = int(pdf["seg_id"].iloc[0])
         bucket = int(pdf["bucket"].iloc[0])
         pdf = pdf.sort_values(["term", "doc_id"])
-        rows = []
         terms = pdf["term"].to_numpy()
-        docs = pdf["doc_id"].to_numpy(np.uint64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        dlq_arr = pdf["dl_q"].to_numpy(np.int64)
-        change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(terms)]))
-        for s, e in zip(starts, ends):
-            rows.extend(
-                _encode_term_blocks(
-                    terms[s], bucket, seg_id, docs[s:e], tfs[s:e], dlq_arr[s:e]
-                )
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
+        starts = np.concatenate(([0], np.flatnonzero(terms[1:] != terms[:-1]) + 1))
+        return encode_blocks(
+            seg_id,
+            terms[starts],
+            np.full(starts.size, bucket),
+            starts,
+            pdf["doc_id"].to_numpy(np.uint64),
+            pdf["tf"].to_numpy(np.int64),
+            pdf["dl_q"].to_numpy(np.int64),
+        )
 
     return p.groupBy("seg_id", "bucket").applyInPandas(encode_group, SEGMENT_SCHEMA)
 
@@ -292,7 +318,7 @@ def _encode_segment_tokens(
     c = codes[order]
     d = docs_raw[order]
     if c.size == 0:
-        return [], norm_row
+        return _empty_segment_frame(), norm_row
     is_new = np.empty(c.size, dtype=bool)
     is_new[0] = True
     is_new[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
@@ -303,7 +329,6 @@ def _encode_segment_tokens(
     dl_q = dl_all[(gd.astype(np.int64) - first)]
 
     pos_deltas = None
-    occ_bounds = None
     if has_pos:
         # per-run delta encoding: first position absolute, then gaps —
         # one vectorized diff with the run starts reset to absolutes
@@ -313,28 +338,26 @@ def _encode_segment_tokens(
         deltas[1:] = p[1:] - p[:-1]
         deltas[starts_rl] = p[starts_rl]
         pos_deltas = deltas.astype(np.uint64)
-        occ_bounds = np.concatenate(([0], np.cumsum(tfs)))
 
-    change = np.flatnonzero(gc[1:] != gc[:-1]) + 1
-    t_starts = np.concatenate(([0], change))
-    t_ends = np.concatenate((change, [gc.size]))
-    rows = []
-    for s, e in zip(t_starts, t_ends):
-        term = uniques[gc[s]]
-        rows.extend(
-            _encode_term_blocks(
-                term,
-                term_bucket_fn(term, n_buckets),
-                seg_id,
-                gd[s:e],
-                tfs[s:e],
-                dl_q[s:e],
-                None
-                if pos_deltas is None
-                else pos_deltas[occ_bounds[s] : occ_bounds[e]],
-            )
-        )
+    t_starts = np.concatenate(([0], np.flatnonzero(gc[1:] != gc[:-1]) + 1))
+    terms = uniques[gc[t_starts]]
+    buckets = [term_bucket_fn(term, n_buckets) for term in terms]
+    rows = encode_blocks(
+        seg_id, terms, buckets, t_starts, gd, tfs, dl_q, pos_deltas
+    )
     return rows, norm_row
+
+
+def _with_norm_row(rows: pd.DataFrame, norm: tuple) -> pd.DataFrame:
+    """Block rows plus the segment's norm marker row (bucket -1, norm
+    bytes in ``doc_gaps``, sum_dl in ``min_dl``, n_docs in ``n``)."""
+    seg_id, first, n_docs, sum_dl, norm_bytes = norm
+    marker = pd.DataFrame(
+        [(-1, seg_id, NORM_MARKER, 0, n_docs, norm_bytes, b"", first,
+          first + n_docs - 1, 0, sum_dl, 0, b"")],
+        columns=rows.columns,
+    )
+    return pd.concat([rows, marker], ignore_index=True) if len(rows) else marker
 
 
 def build_single_pass(
@@ -362,32 +385,13 @@ def build_single_pass(
     )
 
     def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if pdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+            return _empty_segment_frame()
         seg_id = int(pdf["seg_id"].iloc[0])
-        rows, norm = _encode_segment_tokens(
-            seg_id, pdf, n_buckets, seg_size, term_bucket
+        # norm rows live in bucket -1 (own partition dir)
+        return _with_norm_row(
+            *_encode_segment_tokens(seg_id, pdf, n_buckets, seg_size, term_bucket)
         )
-        seg_id_, first, n_docs, sum_dl, norm_bytes = norm
-        rows.append(
-            (
-                -1,  # norm rows live in bucket -1 (own partition dir)
-                seg_id_,
-                NORM_MARKER,
-                0,
-                n_docs,
-                norm_bytes,
-                b"",
-                first,
-                first + n_docs - 1,
-                0,
-                sum_dl,
-                0,
-                b"",
-            )
-        )
-        return pd.DataFrame(rows, columns=cols)
 
     return t.groupBy("seg_id").applyInPandas(encode_seg, SEGMENT_SCHEMA)
 
@@ -422,9 +426,8 @@ def build_single_pass_from_docs(
     tok_re = _re.compile(r"[a-z0-9]+")
 
     def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if pdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+            return _empty_segment_frame()
         reject_null_ids(pdf["doc_id"], "doc_id")
         seg_id = int(pdf["seg_id"].iloc[0])
         doc_arrs, term_arrs, pos_arrs = [], [], []
@@ -438,11 +441,8 @@ def build_single_pass_from_docs(
             pos_arrs.append(np.arange(n, dtype=np.int64))
         if not doc_arrs:
             # keep the norm row so empty-doc segments stay represented
-            first = seg_id * seg_size
-            return pd.DataFrame(
-                [(-1, seg_id, NORM_MARKER, 0, 0, b"", b"", first, first - 1,
-                  0, 0, 0, b"")],
-                columns=cols,
+            return _with_norm_row(
+                _empty_segment_frame(), (seg_id, seg_id * seg_size, 0, 0, b"")
             )
         tok_pdf = pd.DataFrame(
             {
@@ -451,15 +451,11 @@ def build_single_pass_from_docs(
                 "pos": np.concatenate(pos_arrs),
             }
         )
-        rows, norm = _encode_segment_tokens(
-            seg_id, tok_pdf, n_buckets, seg_size, term_bucket
+        return _with_norm_row(
+            *_encode_segment_tokens(
+                seg_id, tok_pdf, n_buckets, seg_size, term_bucket
+            )
         )
-        seg_id_, first, n_docs, sum_dl, norm_bytes = norm
-        rows.append(
-            (-1, seg_id_, NORM_MARKER, 0, n_docs, norm_bytes, b"", first,
-             first + n_docs - 1, 0, sum_dl, 0, b"")
-        )
-        return pd.DataFrame(rows, columns=cols)
 
     return t.groupBy("seg_id").applyInPandas(encode_seg, SEGMENT_SCHEMA)
 
@@ -539,14 +535,13 @@ def build_segments_direct(
     )
 
     def encode_seg(key, tok_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if tok_pdf.empty or norm_pdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+            return _empty_segment_frame()
         (seg_id,) = key
         rows, _ = _encode_segment_tokens(
             int(seg_id), tok_pdf, n_buckets, seg_size, term_bucket
         )
-        return pd.DataFrame(rows, columns=cols)
+        return rows
 
     return (
         t.groupby("seg_id")
@@ -656,55 +651,45 @@ def merge_segments(
     )
 
     def merge_group(key, pdfs: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in SEGMENT_SCHEMA.fields]
         if pdfs.empty or npdf.empty:
-            return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+            return _empty_segment_frame()
         (new_seg_id,) = key
         first, norm_arr = _concat_norms(npdf)
         dl_all = codec.byte4_to_int(norm_arr)
 
-        out = []
-        for (term, bucket), rows in pdfs.groupby(["term", "bucket"], sort=False):
-            parts = [
-                decode_blocks_pos(seg_rows)
-                for _, seg_rows in sorted(
-                    rows.groupby("seg_id", sort=True), key=lambda kv: kv[0]
-                )
-            ]
-            doc_ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            # per-doc deltas are self-contained (first position absolute),
-            # so merged position streams concatenate without re-encoding
-            has_pos = [p[2] is not None for p in parts]
-            if all(has_pos):
-                pos_deltas = np.concatenate([p[2] for p in parts])
-            elif not any(has_pos):
-                pos_deltas = None
-            else:
-                # a silent degrade here would drop positions from the
-                # merged stream and phrase queries would fail much later
-                # with no hint of which merge lost them — fail loudly at
-                # the merge instead
-                raise ValueError(
-                    f"merge_segments: term {term!r} in merged seg "
-                    f"{new_seg_id} mixes positional and positions-free "
-                    "source segments; rebuild the positions-free segment "
-                    "with a 'pos' column before merging"
-                )
-            dl_q = dl_all[(doc_ids.astype(np.int64) - first)]
-            out.extend(
-                _encode_term_blocks(
-                    term,
-                    int(bucket),
-                    int(new_seg_id),
-                    doc_ids,
-                    tfs,
-                    dl_q,
-                    pos_deltas,
-                )
+        # per term, its source segments' (doc_ids, tfs, pos_deltas) in
+        # seg order
+        terms, buckets, parts = [], [], []
+        for (term, bucket), rows in pdfs.groupby(["term", "bucket"], sort=True):
+            terms.append(term)
+            buckets.append(int(bucket))
+            parts.append(
+                [decode_blocks_pos(r) for _, r in rows.groupby("seg_id", sort=True)]
             )
-        return pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: pd.Series(dtype=object) for c in cols}
+        flat = [p for term_parts in parts for p in term_parts]
+        positional = {p[2] is not None for p in flat}
+        if len(positional) > 1:
+            # a silent degrade here would drop positions from the merged
+            # stream and phrase queries would fail much later with no
+            # hint of which merge lost them — fail loudly at the merge
+            raise ValueError(
+                f"merge_segments: merged seg {new_seg_id} mixes positional "
+                "and positions-free source segments; rebuild the "
+                "positions-free segment with a 'pos' column before merging"
+            )
+        run_lens = [sum(p[0].size for p in term_parts) for term_parts in parts]
+        doc_ids = np.concatenate([p[0] for p in flat])
+        # per-doc deltas are self-contained (first position absolute), so
+        # merged position streams concatenate without re-encoding
+        return encode_blocks(
+            int(new_seg_id),
+            terms,
+            buckets,
+            np.cumsum([0] + run_lens[:-1]),
+            doc_ids,
+            np.concatenate([p[1] for p in flat]),
+            dl_all[doc_ids.astype(np.int64) - first],
+            np.concatenate([p[2] for p in flat]) if positional == {True} else None,
         )
 
     def merge_norms(pdf: pd.DataFrame) -> pd.DataFrame:

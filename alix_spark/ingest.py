@@ -20,8 +20,12 @@ entirely in executors via mapInPandas, no driver-side data.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +34,36 @@ FR_TOKENS = [
     "l'homme", "dis-moi", "parce", "que", "petit", "chat", "fleuve",
     "tranquille", "M.", "Dupont", "chapitre", "XII", "c'est", "d'une",
 ]
+
+
+_release_scope: contextvars.ContextVar[list | None] = contextvars.ContextVar(
+    "release_scope", default=None
+)
+
+
+def scoped_persist(df: DataFrame, level: StorageLevel) -> DataFrame:
+    """``df.persist(level)``, handed to the innermost
+    :func:`release_after` block, if one is open, to be unpersisted there."""
+    df = df.persist(level)
+    frames = _release_scope.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextlib.contextmanager
+def release_after():
+    """Unpersist, on leaving the block, every frame :func:`scoped_persist`
+    cached inside it. A build stage runs its build and write in one, so
+    what the stage cached lives only until its write has committed."""
+    frames: list[DataFrame] = []
+    token = _release_scope.set(frames)
+    try:
+        yield
+    finally:
+        _release_scope.reset(token)
+        for df in frames:
+            df.unpersist()
 
 
 def scalable_row_number(
@@ -59,7 +93,8 @@ def scalable_row_number(
       valid dense rank each time, but per-row assignments can differ).
 
     ``build_index.py`` persists the docs stage to parquet (lineage)
-    regardless — the cached partitions only live until that write.
+    regardless — the cached partitions only live until that write, which
+    unpersists them (:func:`release_after`).
     """
     n_part = max(
         2,
@@ -69,9 +104,7 @@ def scalable_row_number(
         *order_cols
     )
     if persist:
-        from pyspark import StorageLevel
-
-        ordered = ordered.persist(StorageLevel.MEMORY_AND_DISK)
+        ordered = scoped_persist(ordered, StorageLevel.MEMORY_AND_DISK)
     with_pid = ordered.withColumn("_pid", F.spark_partition_id())
     counts = {
         r["_pid"]: r["cnt"]

@@ -63,10 +63,22 @@ def build_plans():
 
 
 @pytest.fixture(scope="module")
-def built_index(spark, src_docs, build_plans, tmp_path_factory):
-    """The CLI build, with the physical plan of every stage recorded."""
+def build_jobs():
+    """stage -> the Spark job ids its run_stage call ran, and
+    ``after:<stage>`` -> the ids run between that stage and the next
+    one (or the end of the build)."""
+    return {}
+
+
+@pytest.fixture(scope="module")
+def built_index(spark, src_docs, build_plans, build_jobs, tmp_path_factory):
+    """The CLI build, with the physical plan and the Spark jobs of every
+    stage recorded (one job group per stage, set around its run_stage
+    call, as a benchmark's ledger would set its own)."""
     out = str(tmp_path_factory.mktemp("idx"))
     run_stage = BuildContext.run_stage
+    sc = spark.sparkContext
+    groups = []
 
     def traced(self, stage, fingerprint, build, partition_by=None):
         def plan_and_build():
@@ -74,11 +86,23 @@ def built_index(spark, src_docs, build_plans, tmp_path_factory):
             build_plans[stage] = plan_of(df)
             return df
 
-        return run_stage(self, stage, fingerprint, plan_and_build, partition_by)
+        sc.setJobGroup(f"build:{stage}", stage)
+        groups.append(stage)
+        try:
+            return run_stage(self, stage, fingerprint, plan_and_build, partition_by)
+        finally:
+            sc.setJobGroup(f"build:after:{stage}", f"after {stage}")
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(BuildContext, "run_stage", traced)
-        assert build_index.main(_cli_args(src_docs, out)) == 0
+        try:
+            assert build_index.main(_cli_args(src_docs, out)) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    for stage in groups:
+        for key in (stage, f"after:{stage}"):
+            build_jobs[key] = list(sc.statusTracker().getJobIdsForGroup(f"build:{key}"))
     # the build ran at the test session's width (local[8], 8 partitions),
     # not at defaults its own get_spark call would have applied
     meta = json.loads(next((Path(out) / "_meta").glob("*.json")).read_text())
@@ -286,6 +310,88 @@ def test_reader_open_runs_no_listing_job(spark, tmp_path):
         if d.isDefined() and d.get().startswith("Listing leaf files")
     ]
     assert listing == []
+    # nor any other job: _meta is parsed on the driver and every table is
+    # read with its known schema (no footer-inference job)
+    assert [d.get() if d.isDefined() else None for d in descriptions] == []
+
+
+def test_lineage_records_match_the_written_tables(spark, built_index):
+    """Each stage's lineage rows/bytes/files come from the written files,
+    with no count job: they equal a count of the table read back and the
+    sizes of its parquet part files."""
+    recs = _lineage(built_index)
+    assert set(recs) == {
+        "docs", "postings", "doc_lens", "forms", "offsets", "segments0", "norms0"
+    }
+    for stage, rec in recs.items():
+        table = Path(built_index) / stage
+        files = list(table.rglob("*.parquet"))
+        assert rec["rows"] == spark.read.parquet(str(table)).count(), stage
+        assert rec["bytes"] == sum(f.stat().st_size for f in files), stage
+        assert rec["files"] == len(files), stage
+    metrics = spark.read.parquet(f"{built_index}/_metrics")
+    assert {r["stage"]: (r["rows"], r["bytes"], r["files"]) for r in metrics.collect()} == {
+        s: (r["rows"], r["bytes"], r["files"]) for s, r in recs.items()
+    }
+    lineage = spark.read.parquet(f"{built_index}/_lineage_table")
+    assert {r["stage"]: r["fingerprint"] for r in lineage.collect()} == {
+        s: r["fingerprint"] for s, r in recs.items()
+    }
+
+
+def test_build_stages_run_only_their_work(built_index, build_jobs):
+    """No read-back or count job follows a stage's write, and the
+    metadata written after the last stage is the driver's: postings is
+    its one map-side write job, doc_lens and norms0 are an aggregation's
+    map stage plus the write, and nothing runs after norms0."""
+    assert len(build_jobs["postings"]) == 1
+    assert len(build_jobs["doc_lens"]) <= 2
+    assert len(build_jobs["norms0"]) <= 2
+    assert build_jobs["after:norms0"] == []
+
+
+def test_segments_and_offsets_write_at_session_width(built_index):
+    """--buckets is layout only: one file per bucket dir, and offsets
+    written at the session's width (8 here) rather than one task per
+    bucket."""
+    seg = Path(built_index) / "segments0"
+    assert all(
+        len(list(d.glob("*.parquet"))) == 1 for d in seg.glob("bucket=*")
+    )
+    assert len(list((Path(built_index) / "offsets").glob("*.parquet"))) <= 8
+
+
+def test_meta_keeps_its_keys(spark, built_index):
+    """_meta is written by the driver with every key it had, readable as
+    before by a JSON glob and by spark.read.json."""
+    meta_dir = Path(built_index) / "_meta"
+    assert sorted(p.name for p in meta_dir.iterdir()) == [
+        "_SUCCESS", "part-00000.json"
+    ]
+    meta = json.loads((meta_dir / "part-00000.json").read_text())
+    assert set(meta) == {
+        "n_docs", "n_docs_with_tokens", "avgdl", "seg_size_final", "buckets",
+        "shuffle_partitions", "cores", "final_segments", "final_norms",
+    }
+    assert meta["n_docs"] == 500 + len(EMPTY_TEXTS)
+    assert meta["final_segments"] == "segments0"
+    assert meta["final_norms"] == "norms0"
+    assert spark.read.json(str(meta_dir)).collect()[0].asDict() == meta
+
+
+def test_build_releases_what_it_persists(spark, tmp_path):
+    """The row numbering of docs and forms persists its range-partitioned
+    input; each is unpersisted once its stage's write has committed."""
+    from alix_spark import ingest
+
+    src = str(tmp_path / "docs.parquet")
+    ingest.synthesize_code_corpus(spark, 40).write.parquet(src)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    assert build_index.main(
+        ["--input", src, "--out", str(tmp_path / "idx"), "--seg-size", "16"]
+    ) == 0
+    assert set(rdds().keys()) == before
 
 
 def test_postings_stage_has_no_exchange(built_index, build_plans):
