@@ -9,8 +9,8 @@ idiomatic Spark engine:
   directory;
 * analysis (tokenize / lemmatize / compound) is an Arrow-vectorized kernel
   with broadcast dictionaries, never per-row Python;
-* ranked retrieval is BM25 over posting joins with a block-max WAND fast
-  path for compressed segments;
+* ranked retrieval is BM25 over posting joins, and a per-segment
+  vectorized kernel over compressed segments;
 * statistics (term freq lists, facet aggregations, chronologies, windowed
   co-occurrences with mutual-information scoring) are DataFrame plans that
   Catalyst optimizes.

@@ -40,8 +40,8 @@ Each stage runs only its own work (see :mod:`alix_spark.index.lineage`):
 its lineage record comes from the written files, and ``_meta``,
 ``_lineage_table`` and ``_metrics`` are written by the driver.
 
-The final segment/norm tables + forms are everything the WAND query path
-needs (see alix_spark.search.wand / alix_spark.index.reader).
+The final segment/norm tables + forms are everything the segment query
+path needs (see alix_spark.search.wand / alix_spark.index.reader).
 """
 
 from __future__ import annotations

@@ -11,10 +11,9 @@ corpus rescan. Plays the role of the reference's
 Every ranked query runs as Lucene runs a ``BooleanQuery``: inside each
 segment, against that segment's postings and norms. The plan is one
 cogroup of the (bucket, term)-pruned segment rows with the norm rows,
-one kernel per segment (block-max WAND for pure OR, the exhaustive
-boolean kernel otherwise — :mod:`alix_spark.search.wand`), then one
-global top-k. No query joins, and none expands the norms into a per-doc
-table.
+one exhaustive kernel per segment for every query shape
+(:func:`alix_spark.search.wand.boolean_topk`), then one global top-k.
+No query joins, and none expands the norms into a per-doc table.
 
 Scoring on this path is Lucene-faithful: per-doc lengths come from the
 stored SmallFloat norms (byte-quantized, like Lucene's), avgdl from the
@@ -255,17 +254,19 @@ class IndexReader:
         """Top-k retrieval for the full +/-/* query grammar →
         (doc_id, score), served entirely from the persisted index. Every
         query shape is one cogroup of the (bucket, term)-pruned segment
-        rows with the norms, one kernel per segment, then a global top-k:
+        rows with the norms, one kernel per segment
+        (:func:`wand.boolean_topk`), then a global top-k:
 
-        * pure OR → block-max WAND (:func:`wand.wand_topk`)
-        * MUST / MUST_NOT → the boolean kernel (:func:`wand.boolean_topk`):
-          per segment, the MUST intersection (or SHOULD union) minus the
-          MUST_NOT docs, positive terms scored with corpus-wide idf
-          (``Alix.java:714-754`` semantics)
+        * pure OR → the union of the SHOULD docs
+        * MUST / MUST_NOT → the MUST intersection (or SHOULD union) minus
+          the MUST_NOT docs
         * ``prefix*`` → vocabulary expansion into SHOULD clauses; one
           that expands to nothing matches nothing
         * pure-negative → every doc with a token minus the exclusions,
           score 0, by doc id
+
+        Positive terms score with corpus-wide idf (``Alix.java:714-754``
+        semantics).
         """
         parsed = self._parse_expanded(q)
         terms = parsed.positive_terms
@@ -275,16 +276,4 @@ class IndexReader:
                 # not a malformed query
                 return self.spark.createDataFrame([], wand_mod.TOPK_SCHEMA)
             raise ValueError(f"empty query: {q!r}")
-        dfs = self.dfs_for(terms)
-        if parsed.must or parsed.must_not:
-            return self._boolean(parsed, dfs, k)
-        return wand_mod.wand_topk(
-            self.segments,
-            self.norms,
-            terms,
-            dfs,
-            self.n_docs,
-            self.avgdl,
-            k=k,
-            n_buckets=self.n_buckets,
-        )
+        return self._boolean(parsed, self.dfs_for(terms), k)

@@ -12,11 +12,10 @@ Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
   to be the doc range so that segments stay directly concatenable.
 * Within a (segment, term): doc ids are delta-gap + varbyte encoded in
   blocks of ``BLOCK`` docs with per-block metadata (first/last doc,
-  max_tf, min_dl). The block-max WAND impact bound is derived at query
-  time as ``idf · tf_w(max_tf, min_dl, avgdl)`` — a valid upper bound
-  because the BM25 tf-weight is increasing in tf and decreasing in dl.
-  Storing (max_tf, min_dl) instead of a precomputed weight keeps the
-  encoder free of any corpus-global statistic, which is what makes the
+  max_tf, min_dl, sum_tf). Queries decode the blocks whole
+  (:func:`decode_blocks`) and score every posting; no reader uses
+  ``max_tf``/``min_dl``, which stay in the index format.
+  The encoder reads no corpus-global statistic, which is what makes the
   single-pass build possible.
 * **Norms**: one byte per doc per segment (Lucene's norm layout), the
   SmallFloat byte4 of the doc length.
@@ -36,8 +35,8 @@ Schema of the postings-segment table (one row per term-block):
     doc_gaps: binary   -- varbyte(delta(doc_ids))
     tfs:    binary     -- varbyte(tfs)
     first_doc, last_doc: long
-    max_tf: int        -- query-time impact bound input
-    min_dl: long       -- query-time impact bound input (quantized len)
+    max_tf: int        -- block max tf (no reader)
+    min_dl: long       -- block min quantized doc len (no reader)
     sum_tf: long       -- block tf total (forms table derives from this)
     positions: binary  -- varbyte(per-doc delta(positions)), tf values per
                           posting; b"" when built without positions
@@ -71,7 +70,6 @@ from pyspark.sql.types import (
 
 from alix_spark.index import codec
 from alix_spark.index.build import reject_null_ids
-from alix_spark.search.bm25 import B, K1
 
 BLOCK = 128
 DEFAULT_SEG_SIZE = 8192
@@ -108,19 +106,6 @@ NORMS_SCHEMA = StructType(
         StructField("norm_bytes", BinaryType()),
     ]
 )
-
-
-def tf_weight(tf, dl_q, avgdl: float):
-    """Lucene-8 BM25 tf weight (no (k1+1) numerator) — works on numpy
-    arrays or python floats."""
-    tf = np.asarray(tf, dtype=np.float64)
-    dl = np.asarray(dl_q, dtype=np.float64)
-    return tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
-def block_bound_w(max_tf, min_dl, avgdl: float) -> float:
-    """Query-time per-block tf-weight upper bound."""
-    return float(tf_weight(max_tf, min_dl, avgdl))
 
 
 def _empty_segment_frame() -> pd.DataFrame:
@@ -516,47 +501,13 @@ def forms_from_segments(segments: DataFrame) -> DataFrame:
     )
 
 
-def build_segments_direct(
-    tokens: DataFrame,
-    norms: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Single-shuffle build against precomputed norms (kept for
-    compatibility; `build_single_pass` subsumes it). Row-identical to
-    the two-stage path (property-tested)."""
-    from alix_spark.index.xxhash import term_bucket
-
-    cols_in = ["doc_id", "term"] + (
-        ["pos"] if "pos" in tokens.columns else []
-    )
-    t = tokens.select(*cols_in).withColumn(
-        "seg_id", (F.col("doc_id") / seg_size).cast("long")
-    )
-
-    def encode_seg(key, tok_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-        if tok_pdf.empty or norm_pdf.empty:
-            return _empty_segment_frame()
-        (seg_id,) = key
-        rows, _ = _encode_segment_tokens(
-            int(seg_id), tok_pdf, n_buckets, seg_size, term_bucket
-        )
-        return rows
-
-    return (
-        t.groupby("seg_id")
-        .cogroup(norms.groupby("seg_id"))
-        .applyInPandas(encode_seg, SEGMENT_SCHEMA)
-    )
-
-
 # ---------------------------------------------------------------------- #
 # decode + merge
 # ---------------------------------------------------------------------- #
 
 
 def decode_blocks(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Block rows of ONE (seg, term) — sorted by block_id — → (doc_ids, tfs)."""
+    """Block rows of ONE (seg, term), in any order → (doc_ids, tfs)."""
     ids, tfs, _ = decode_blocks_pos(rows)
     return ids, tfs
 
@@ -566,28 +517,41 @@ def decode_blocks_pos(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
     """Like :func:`decode_blocks` but also returns the occurrence-aligned
     per-doc position deltas (None if the segment was built without
-    positions)."""
-    ids = []
-    tfs = []
-    pos = []
-    has_pos = True
-    for r in rows.sort_values("block_id").itertuples(index=False):
-        ids.append(codec.delta_decode(codec.varbyte_decode(r.doc_gaps, r.n)))
-        t = codec.varbyte_decode(r.tfs, r.n)
-        tfs.append(t)
-        buf = getattr(r, "positions", b"") or b""
-        if len(buf) == 0 and int(t.sum()) > 0:
-            has_pos = False
-        elif has_pos:
-            pos.append(codec.varbyte_decode(bytes(buf), int(t.sum())))
-    if not ids:
+    positions).
+
+    The inverse of :func:`encode_blocks`: the rows are put in
+    ``block_id`` order, each column's block buffers are joined and
+    varbyte-decoded in one pass, and the doc ids are one cumsum over the
+    gaps, restarted at every block's (absolute) first doc."""
+    if rows.empty:
         empty = np.array([], dtype=np.uint64)
         return empty, empty.copy(), empty.copy()
-    return (
-        np.concatenate(ids),
-        np.concatenate(tfs),
-        np.concatenate(pos) if has_pos and pos else (None if not has_pos else np.array([], dtype=np.uint64)),
-    )
+    order = np.argsort(rows["block_id"].to_numpy(), kind="stable")
+    n = rows["n"].to_numpy(np.int64)[order]
+    total = int(n.sum())
+
+    def column(name: str) -> list:
+        return rows[name].to_numpy()[order].tolist()
+
+    gaps = codec.varbyte_decode(b"".join(column("doc_gaps")), total)
+    tfs = codec.varbyte_decode(b"".join(column("tfs")), total)
+    # uint64 wraps consistently, so subtracting each block's running
+    # prefix is exact even if the cumsum over all blocks overflows
+    ends = np.cumsum(n)
+    starts = ends - n
+    run = np.cumsum(gaps, dtype=np.uint64)
+    before = np.concatenate((np.zeros(1, np.uint64), run))[starts]
+    ids = run - np.repeat(before, n)
+
+    if "positions" not in rows.columns:
+        return ids, tfs, None
+    bufs = [b or b"" for b in column("positions")]
+    occ = np.concatenate(([0], np.cumsum(tfs, dtype=np.int64)))
+    block_tf = occ[ends] - occ[starts]
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    if ((lens == 0) & (block_tf > 0)).any():
+        return ids, tfs, None
+    return ids, tfs, codec.varbyte_decode(b"".join(bufs), int(occ[-1]))
 
 
 def positions_per_doc(

@@ -1,1 +1,1 @@
-"""Query engine: parser, boolean retrieval, BM25 ranking, WAND fast path."""
+"""Query engine: parser, boolean retrieval, BM25 ranking, segment kernel."""

@@ -11,7 +11,7 @@ grouped-by-segment Arrow kernel, no corpus rescan, no join explosion.
 Scale shape: the shuffle carries ONLY the query terms' block rows
 (``term IN (...)`` and ``bucket IN (...)`` are pushed to the scan), and
 each kernel invocation handles one docId-range segment — identical
-distribution to the WAND scorer (``alix_spark/search/wand.py``).
+distribution to the ranked-query kernel (``alix_spark/search/wand.py``).
 """
 
 from __future__ import annotations

@@ -15,22 +15,14 @@ per segment, with one physical plan for every query shape:
 * global top-k = ``orderBy(score desc, doc_id asc).limit(k)`` — Spark's
   ``TakeOrderedAndProject``.
 
-Two kernels plug into that plan:
-
-* :func:`wand_topk` — pure OR (SHOULD) queries, block-max WAND
-  (:func:`wand_segment_topk`). It keeps a threshold = k-th best score;
-  orders terms by current doc; picks the pivot term where the cumulative
-  idf*block_max_w upper bound crosses the threshold; if even the
-  block-level bound can't beat the threshold, it skips whole blocks.
-* :func:`boolean_topk` — MUST / SHOULD-under-MUST / MUST_NOT and
-  pure-negative queries (Lucene ``BooleanQuery``, ``Alix.java:714-754``),
-  exhaustive: decode each clause term once, mask the segment's docs to
-  the boolean match set (:func:`boolean_mask`), score the survivors
-  (:func:`score_segment_vectorized`). ``k=None`` returns the whole
-  match set (``IndexReader.boolean_docs``).
-
-:func:`wand_topk_batch` answers many OR queries in one pass with the
-exhaustive scorer.
+One kernel plugs into that plan, :func:`boolean_topk`, for every query
+shape: pure OR (SHOULD), MUST / SHOULD-under-MUST / MUST_NOT and
+pure-negative (Lucene ``BooleanQuery``, ``Alix.java:714-754``). It is
+exhaustive: decode each clause term once, mask the segment's docs to
+the boolean match set (:func:`boolean_mask`), score the survivors
+(:func:`score_segment_vectorized`). ``k=None`` returns the whole match
+set (``IndexReader.boolean_docs``). :func:`wand_topk_batch` answers
+many OR queries in one pass with the same decode and scorer.
 
 Scoring matches the Lucene-faithful mode of :mod:`alix_spark.search.bm25`
 (quantized norms, float32 per-clause scores, corpus-wide idf) so every
@@ -40,7 +32,6 @@ reference.
 
 from __future__ import annotations
 
-import heapq
 from collections import Counter
 
 import numpy as np
@@ -64,177 +55,11 @@ TOPK_SCHEMA = StructType(
 )
 
 
-# upper bounds are computed in double while actual clause scores round
-# through float32 — inflate bounds slightly so rounding can never cause a
-# wrongly-skipped document
-_BOUND_SLACK = 1.0 + 1e-6
-
-
-class _TermCursor:
-    """Decoded block-at-a-time cursor over one term's blocks in a segment."""
-
-    __slots__ = (
-        "idf", "blocks", "bi", "pi", "doc_ids", "tfs", "exhausted",
-        "weight", "avgdl", "_bounds", "_suffix_max",
-    )
-
-    def __init__(
-        self,
-        idf: float,
-        blocks: pd.DataFrame,
-        weight: float = 1.0,
-        avgdl: float = 1.0,
-    ):
-        self.idf = idf
-        self.weight = weight
-        self.avgdl = avgdl
-        self.blocks = blocks.sort_values("block_id").reset_index(drop=True)
-        # per-block impact bound derived from (max_tf, min_dl): tf_w is
-        # increasing in tf, decreasing in dl, so this dominates every
-        # posting in the block
-        mt = self.blocks["max_tf"].to_numpy()
-        md = self.blocks["min_dl"].to_numpy()
-        self._bounds = seg_mod.tf_weight(mt, md, avgdl)
-        # suffix maxima: bound over ALL remaining blocks in O(1)
-        self._suffix_max = np.maximum.accumulate(self._bounds[::-1])[::-1]
-        self.bi = -1
-        self.exhausted = False
-        self._next_block()
-
-    def _next_block(self):
-        self.bi += 1
-        if self.bi >= len(self.blocks):
-            self.exhausted = True
-            self.doc_ids = np.array([], dtype=np.int64)
-            return
-        r = self.blocks.iloc[self.bi]
-        self.doc_ids = codec.delta_decode(
-            codec.varbyte_decode(r["doc_gaps"], r["n"])
-        ).astype(np.int64)
-        self.tfs = codec.varbyte_decode(r["tfs"], r["n"]).astype(np.int64)
-        self.pi = 0
-
-    @property
-    def doc(self) -> int:
-        if self.exhausted:
-            return 1 << 62
-        return int(self.doc_ids[self.pi])
-
-    @property
-    def block_max_contrib(self) -> float:
-        if self.exhausted:
-            return 0.0
-        return self.weight * self.idf * float(self._bounds[self.bi]) * _BOUND_SLACK
-
-    @property
-    def max_contrib(self) -> float:
-        """Upper bound over ALL remaining blocks (term-level WAND bound)."""
-        if self.exhausted:
-            return 0.0
-        return (
-            self.weight * self.idf * float(self._suffix_max[self.bi]) * _BOUND_SLACK
-        )
-
-    def advance(self, target: int):
-        """Move to the first posting with doc >= target (block skipping)."""
-        while not self.exhausted and int(
-            self.blocks.iloc[self.bi]["last_doc"]
-        ) < target:
-            self._next_block()
-        if self.exhausted:
-            return
-        idx = np.searchsorted(self.doc_ids[self.pi :], target, side="left")
-        self.pi += int(idx)
-        if self.pi >= self.doc_ids.size:
-            self._next_block()
-            if not self.exhausted:
-                self.advance(target)
-
-    def score_current(self, dl_q: int, avgdl: float) -> float:
-        tf = float(self.tfs[self.pi])
-        w = tf / (tf + K1 * (1.0 - B + B * dl_q / avgdl))
-        # float32 per-clause, as Lucene
-        return self.weight * float(np.float32(self.idf * w))
-
-    def next_doc(self):
-        self.pi += 1
-        if self.pi >= self.doc_ids.size:
-            self._next_block()
-
-
-def wand_segment_topk(
-    term_blocks: dict[str, pd.DataFrame],
-    idfs: dict[str, float],
-    weights: dict[str, float],
-    norm_first: int,
-    norm_dl: np.ndarray,
-    avgdl: float,
-    k: int,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over one segment → local top-k [(doc, score)]."""
-    cursors = [
-        _TermCursor(idfs[t], blocks, weights.get(t, 1.0), avgdl)
-        for t, blocks in term_blocks.items()
-        if not blocks.empty and t in idfs
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of top-k
-    threshold = -1.0
-    while True:
-        cursors = [c for c in cursors if not c.exhausted]
-        if not cursors:
-            break
-        cursors.sort(key=lambda c: c.doc)
-        # find pivot: smallest prefix whose max contributions can beat
-        # the threshold
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(cursors):
-            acc += c.max_contrib
-            if acc > threshold:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # nothing can beat the threshold
-        pivot_doc = cursors[pivot_idx].doc
-        if cursors[0].doc == pivot_doc:
-            # all cursors up to pivot are on pivot_doc: check block-max
-            block_bound = sum(
-                c.block_max_contrib for c in cursors if c.doc == pivot_doc
-            )
-            if block_bound <= threshold:
-                # block-level bound can't beat threshold: advance past doc
-                for c in cursors:
-                    if c.doc == pivot_doc:
-                        c.next_doc()
-                continue
-            dl_q = int(norm_dl[pivot_doc - norm_first])
-            score = 0.0
-            for c in cursors:
-                if c.doc == pivot_doc:
-                    score += c.score_current(dl_q, avgdl)
-                    c.next_doc()
-            if len(heap) < k:
-                heapq.heappush(heap, (score, -pivot_doc))
-                if len(heap) == k:
-                    threshold = heap[0][0]
-            elif (score, -pivot_doc) > heap[0]:
-                heapq.heapreplace(heap, (score, -pivot_doc))
-                threshold = heap[0][0]
-        else:
-            # advance cursors before the pivot up to the pivot doc
-            for c in cursors[:pivot_idx]:
-                c.advance(pivot_doc)
-    out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-    return [(-d, s) for s, d in out]
-
-
-# the columns the scorers actually decode — selecting them before the
-# cogroup keeps the (large binary) position payloads out of the Arrow
-# transfer and the shuffle
+# the columns the decoder reads — selecting them before the cogroup
+# keeps the positions and the block metadata out of the Arrow transfer
+# and the shuffle
 _SCORING_COLS = [
     "seg_id", "term", "block_id", "n", "doc_gaps", "tfs",
-    "first_doc", "last_doc", "max_tf", "min_dl",
 ]
 
 
@@ -318,42 +143,6 @@ def _global_topk(local: DataFrame, k: int) -> DataFrame:
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def wand_topk(
-    segments: DataFrame,
-    norms: DataFrame,
-    terms: list[str],
-    dfs: dict[str, int],
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = seg_mod.DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Distributed block-max WAND → (doc_id, score) global top-k.
-
-    ``segments``/``norms`` are the tables from
-    :mod:`alix_spark.index.segments`; ``dfs`` are CORPUS-wide doc freqs
-    (from the forms table) so idf matches the DataFrame path.
-    """
-    weights = dict(Counter(terms))
-    idfs = _idfs(terms, dfs, n_docs)
-
-    def run_seg(blocks: pd.DataFrame, first: int, norm_bytes: np.ndarray):
-        term_blocks = {t: g for t, g in blocks.groupby("term", sort=False)}
-        top = wand_segment_topk(
-            term_blocks,
-            idfs,
-            weights,
-            first,
-            codec.byte4_to_int(norm_bytes),
-            avgdl,
-            k,
-        )
-        return _frame(TOPK_SCHEMA, top)
-
-    local = _per_segment(segments, norms, terms, n_buckets, run_seg, TOPK_SCHEMA)
-    return _global_topk(local, k)
-
-
 def decode_clauses(
     blocks: pd.DataFrame,
     first: int,
@@ -398,11 +187,8 @@ def score_segment_vectorized(
     :func:`decode_clauses` into a dense per-segment accumulator, then
     sort. The docs ranked are ``candidates`` (a bool mask over the
     segment's ``n_docs`` docs) when given, else every doc a clause
-    touched. ``k=None`` keeps them all. For Zipf-head query terms (where
-    WAND's threshold can't prune much) this is ~100× the Python-loop
-    WAND; `wand_segment_topk` remains the selective-query path and the
-    semantics reference — same float behavior: clause =
-    float64(float32(idf * w)), summed in float64.
+    touched. ``k=None`` keeps them all. Float behavior is Lucene's:
+    clause = float64(float32(idf * w)), summed in float64.
     """
     acc = np.zeros(n_docs, dtype=np.float64)
     touched = np.zeros(n_docs, dtype=bool)
@@ -468,11 +254,11 @@ def boolean_topk(
 ) -> DataFrame:
     """Distributed BooleanQuery → (doc_id, score) global top-k.
 
-    The same per-segment plan as :func:`wand_topk` — one cogroup of the
-    (bucket, term)-pruned block rows with the norms — but the kernel is
-    exhaustive: it decodes each clause term once, builds the match set
-    with :func:`boolean_mask`, and ranks it with
-    :func:`score_segment_vectorized`. Every positive clause scores
+    One cogroup of the (bucket, term)-pruned block rows with the norms;
+    per segment the kernel decodes each clause term once, builds the
+    match set with :func:`boolean_mask`, and ranks it with
+    :func:`score_segment_vectorized`. A pure OR query is ``must=[]``,
+    ``must_not=[]``. Every positive clause scores
     (``Counter`` weights for repeated terms), with corpus-wide idf from
     ``dfs``; a pure-negative query scores 0 and ranks by doc id.
     ``k=None`` returns every matching doc, unordered (the match set).

@@ -221,7 +221,7 @@ class StreamingIndexer:
 
     def current_n_buckets(self) -> int:
         """The CURRENT version's term-bucket count. Like seg_size this is
-        index layout, not construction state: WAND prunes file scans with
+        index layout, not construction state: queries prune file scans with
         a bucket predicate derived from it, so a reader (or a reopened
         indexer) that guessed the constructor default against an index
         built with another bucket count would silently drop matching

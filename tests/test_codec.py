@@ -105,17 +105,20 @@ def test_encode_blocks_at_block_edges():
             tuple(x.item() if isinstance(x, np.generic) else x for x in r)
             for r in got.itertuples(index=False)
         ] == expect
+        # in block order and reversed: the decoder sorts by block_id
         for i, term in enumerate(terms):
-            d, t, p = seg_mod.decode_blocks_pos(got[got["term"] == term])
-            assert np.array_equal(d, ids[i]) and np.array_equal(t, tfs[i])
-            if pos_deltas is None:
-                assert p is None
-                assert (got["positions"] == b"").all()
-            else:
-                occ = np.concatenate(([0], np.cumsum(tfs_all)))
-                lo = starts[i]
-                hi = starts[i + 1] if i + 1 < len(terms) else ids_all.size
-                assert np.array_equal(p, pos[occ[lo] : occ[hi]])
+            rows = got[got["term"] == term]
+            for shuffled in (rows, rows.iloc[::-1]):
+                d, t, p = seg_mod.decode_blocks_pos(shuffled)
+                assert np.array_equal(d, ids[i]) and np.array_equal(t, tfs[i])
+                if pos_deltas is None:
+                    assert p is None
+                    assert (got["positions"] == b"").all()
+                else:
+                    occ = np.concatenate(([0], np.cumsum(tfs_all)))
+                    lo = starts[i]
+                    hi = starts[i + 1] if i + 1 < len(terms) else ids_all.size
+                    assert np.array_equal(p, pos[occ[lo] : occ[hi]])
 
 
 def test_encode_blocks_of_no_postings_is_empty():

@@ -83,7 +83,7 @@ def test_untouched_segments_bit_identical(spark, v1, changed):
 
 
 def test_updated_index_matches_fresh_computation(spark, v1, changed):
-    """WAND BM25 on the incrementally-updated segments == DataFrame BM25
+    """Kernel BM25 on the incrementally-updated segments == DataFrame BM25
     recomputed from scratch on the updated docs table (same id space)."""
     from alix_spark.analysis import simple
     from alix_spark.index import build as ib
@@ -105,8 +105,8 @@ def test_updated_index_matches_fresh_computation(spark, v1, changed):
         if r["term"] in ("fast", "join", "merge", "updated", "insert")
     }
     for q in ["fast join merge", "updated insert"]:
-        got = wand_mod.wand_topk(
-            segs_new, norms_new, q.split(), dfs, n, avgdl, k=10
+        got = wand_mod.boolean_topk(
+            segs_new, norms_new, [], q.split(), [], dfs, n, avgdl, k=10
         ).collect()
         exp = bm25_mod.bm25_topk(
             postings, doc_lens, q.split(), k=10, lucene=True,
@@ -145,7 +145,7 @@ def test_noop_update_returns_same_frames(spark, v1):
 def test_random_update_sequence_equals_full_rebuild(spark):
     """Property: a seeded random SEQUENCE of merge batches (updates +
     inserts + deletes, applied one after another through
-    incremental_update) yields an index whose WAND BM25 matches a
+    incremental_update) yields an index whose kernel BM25 matches a
     from-scratch DataFrame BM25 over the final docs — for every round."""
     import random
 
@@ -210,8 +210,8 @@ def test_random_update_sequence_equals_full_rebuild(spark):
             .collect()
         }
         for q in [f"updated r{round_no}", "fast merge", "fresh join"]:
-            got = wand_mod.wand_topk(
-                segs, norms, q.split(), dfs, n, avgdl, k=10
+            got = wand_mod.boolean_topk(
+                segs, norms, [], q.split(), [], dfs, n, avgdl, k=10
             ).collect()
             exp = bm25_mod.bm25_topk(
                 postings, doc_lens, q.split(), k=10, lucene=True,

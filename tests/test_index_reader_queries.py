@@ -12,6 +12,8 @@ no tokenizer kernel, no documents scan.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -190,6 +192,9 @@ def _assert_same_ranking(got, exp, q):
         ("+fast +fast join", 10),
         ("+fast +join -window", 1000),
         ("+merge -scan sort*", 10),  # wildcard SHOULD under MUST
+        ("fast fast join", 10),  # pure OR: a repeated term scores twice
+        ("fast zzzyx", 10),  # pure OR: a term missing from the vocabulary
+        ("fast join", 1000),  # pure OR: k above the match count
     ],
 )
 def test_boolean_kernel_edge_cases_match_corpus(q, k, corpus, persisted):
@@ -244,6 +249,8 @@ def sparse_terms(spark, tmp_path_factory):
         "+alpha +beta",  # disjoint MUST sets: empty
         "-gamma",
         "-alpha -beta",
+        "alpha beta",  # pure OR over disjoint segments
+        "gamma beta",
     ],
 )
 def test_boolean_kernel_on_segments_without_query_postings(q, sparse_terms):
@@ -259,10 +266,13 @@ def test_boolean_kernel_on_segments_without_query_postings(q, sparse_terms):
 
 
 def test_boolean_plans_are_one_cogroup_without_joins(persisted):
-    """MUST / MUST_NOT run the OR path's physical plan: one cogroup of the
+    """Every query shape runs one physical plan: one cogroup of the
     pruned segment rows with the norms — no per-term decode stage, no
-    join or anti-join, no all-docs norm decode (MapInPandas)."""
+    join or anti-join, no all-docs norm decode (MapInPandas). The scans
+    read only what the decoder reads: no positions and no block-max
+    metadata."""
     for df in (
+        persisted.search("fast join merge", k=10),
         persisted.search("+fast join -window", k=10),
         persisted.boolean_docs("+fast join -window"),
         persisted.search("-fast", k=10),
@@ -272,3 +282,10 @@ def test_boolean_plans_are_one_cogroup_without_joins(persisted):
         assert "FlatMapGroupsInPandas" not in plan, plan
         assert "Join" not in plan, plan
         assert "MapInPandas" not in plan, plan
+        # each scan's column list is its read schema (the ReadSchema
+        # string itself is cut short in the plan text)
+        scans = re.findall(r"FileScan \w+ \[([^\]]*)\]", plan)
+        assert any("doc_gaps" in cols for cols in scans), plan
+        for cols in scans:
+            for col in ("max_tf", "min_dl", "positions"):
+                assert col not in cols, cols

@@ -1,6 +1,6 @@
-"""Compressed segments + block-max WAND: roundtrip, merge tree ≡ direct
-build, and rank identity vs both the DataFrame BM25 path and the Lucene
-goldens."""
+"""Compressed segments + the per-segment kernel: roundtrip, merge tree ≡
+direct build, and rank identity vs both the DataFrame BM25 path and the
+Lucene goldens."""
 
 from __future__ import annotations
 
@@ -103,8 +103,8 @@ def test_merge_tree_equals_direct_build(ctx):
 def test_wand_matches_dataframe_bm25(ctx, q):
     c, segs, norms, n, avgdl, dfs = ctx
     terms = q.split()
-    got = wand_mod.wand_topk(
-        segs, norms, terms, dfs, n, avgdl, k=10
+    got = wand_mod.boolean_topk(
+        segs, norms, [], terms, [], dfs, n, avgdl, k=10
     ).collect()
     exp = bm25_mod.bm25_topk(
         c.postings, c.doc_lens, terms, k=10, lucene=True, n_docs=n, avgdl=avgdl
@@ -120,10 +120,11 @@ def test_wand_matches_dataframe_bm25(ctx, q):
     ids=lambda g: g["q"],
 )
 def test_wand_rank_identity_vs_lucene(ctx, case):
-    """WAND path (OR queries) is rank-identical to the Lucene reference."""
+    """OR queries through the per-segment kernel are rank-identical to
+    the Lucene reference."""
     _, segs, norms, n, avgdl, dfs = ctx
-    got = wand_mod.wand_topk(
-        segs, norms, case["q"].split(), dfs, n, avgdl, k=10
+    got = wand_mod.boolean_topk(
+        segs, norms, [], case["q"].split(), [], dfs, n, avgdl, k=10
     ).collect()
     exp = [(int(d), float(s)) for d, s in case["topk"]]
     assert [r["doc_id"] for r in got] == [d for d, _ in exp]

@@ -78,7 +78,7 @@ def test_final_docs_merged(streamed):
 
 
 def test_streamed_index_matches_fresh(streamed):
-    """WAND BM25 on the streamed index == DataFrame BM25 recomputed from
+    """Kernel BM25 on the streamed index == DataFrame BM25 recomputed from
     the merged docs table."""
     from alix_spark.analysis import simple
     from alix_spark.index import build as ib
@@ -97,8 +97,8 @@ def test_streamed_index_matches_fresh(streamed):
         .collect()
     }
     for q in ["fast merge", "updated epsilon", "fresh theta"]:
-        got = wand_mod.wand_topk(
-            segs, norms, q.split(), dfs, n, avgdl, k=10
+        got = wand_mod.boolean_topk(
+            segs, norms, [], q.split(), [], dfs, n, avgdl, k=10
         ).collect()
         exp = bm25_mod.bm25_topk(
             postings, doc_lens, q.split(), k=10, lucene=True,
@@ -269,7 +269,7 @@ def test_manifest_version_gc(manifested):
 
 
 def test_manifested_index_query_identity(manifested):
-    """WAND BM25 served off the manifest-assembled segments equals a
+    """Kernel BM25 served off the manifest-assembled segments equals a
     fresh DataFrame BM25 over the merged docs."""
     from alix_spark.analysis import simple
     from alix_spark.index import build as ib
@@ -288,8 +288,8 @@ def test_manifested_index_query_identity(manifested):
         .collect()
     }
     for q in ["updated zeta", "fresh theta", "alpha delta"]:
-        got = wand_mod.wand_topk(
-            segs, norms, q.split(), dfs, n, avgdl, k=10
+        got = wand_mod.boolean_topk(
+            segs, norms, [], q.split(), [], dfs, n, avgdl, k=10
         ).collect()
         exp = bm25_mod.bm25_topk(
             postings, doc_lens, q.split(), k=10, lucene=True,
@@ -360,8 +360,8 @@ def test_compaction_and_post_compact_batches(spark, tmp_path):
         .collect()
     }
     for q in ["updated zeta", "fresh theta", "alpha delta"]:
-        got = wand_mod.wand_topk(
-            segs, norms, q.split(), dfs, n, avgdl, k=10
+        got = wand_mod.boolean_topk(
+            segs, norms, [], q.split(), [], dfs, n, avgdl, k=10
         ).collect()
         exp = bm25_mod.bm25_topk(
             postings, doc_lens, q.split(), k=10, lucene=True,
@@ -400,7 +400,7 @@ def test_crash_before_publish_leaves_current_good(spark, tmp_path):
 
 
 def test_index_reader_opens_streaming_manifest(spark, tmp_path):
-    """IndexReader.open_streaming serves WAND queries straight off the
+    """IndexReader.open_streaming serves OR queries straight off the
     CURRENT manifest version — the batch reader's query surface over
     the live streamed index, snapshot-pinned at open time."""
     from alix_spark.index.reader import IndexReader

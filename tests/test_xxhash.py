@@ -1,5 +1,5 @@
 """Python XXH64 == Spark xxhash64 (seed 42), across length regimes and
-non-ASCII; plus direct-build ≡ two-stage-build equivalence."""
+non-ASCII; plus single-pass build ≡ two-stage build equivalence."""
 
 from __future__ import annotations
 
@@ -38,9 +38,6 @@ def test_direct_build_equals_two_stage(spark):
     two_stage = seg_mod.build_segments(
         c.postings, c.doc_lens, seg_size=128
     ).toPandas()
-    direct = seg_mod.build_segments_direct(
-        c.tokens, norms, seg_size=128
-    ).toPandas()
     single, sp_norms = seg_mod.split_single_pass(
         seg_mod.build_single_pass(c.tokens, seg_size=128)
     )
@@ -49,15 +46,12 @@ def test_direct_build_equals_two_stage(spark):
     a = two_stage.sort_values(key).reset_index(drop=True)
     cols = ["bucket", "term", "seg_id", "block_id", "n", "first_doc",
             "last_doc", "max_tf", "min_dl", "sum_tf"]
-    for variant in (direct, single):
-        b = variant.sort_values(key).reset_index(drop=True)
-        assert len(a) == len(b)
-        for col in cols:
-            assert a[col].tolist() == b[col].tolist(), col
-        assert [bytes(x) for x in a["doc_gaps"]] == [
-            bytes(x) for x in b["doc_gaps"]
-        ]
-        assert [bytes(x) for x in a["tfs"]] == [bytes(x) for x in b["tfs"]]
+    b = single.sort_values(key).reset_index(drop=True)
+    assert len(a) == len(b)
+    for col in cols:
+        assert a[col].tolist() == b[col].tolist(), col
+    assert [bytes(x) for x in a["doc_gaps"]] == [bytes(x) for x in b["doc_gaps"]]
+    assert [bytes(x) for x in a["tfs"]] == [bytes(x) for x in b["tfs"]]
     # single-pass norm rows == build_norms output
     nb = {
         r["seg_id"]: (r["first_doc"], r["n_docs"], r["sum_dl"], bytes(r["norm_bytes"]))
