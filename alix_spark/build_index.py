@@ -7,17 +7,31 @@ Usage:
         [--seg-size 8192] [--buckets 32] [--merge-rounds 2] \
         [--text-col content] [--synth N]
 
-Stages (each a parquet checkpoint + lineage record, skipped on resume):
+Stages (each a parquet checkpoint + lineage record, skipped on resume),
+as a DAG after ``docs``:
     docs      — docId assignment (dense rank over (repo, path)) + sha256
                 ingest-invariant check (build FAILS on violation)
     postings  — (term, doc_id, tf, positions), built map-side from the
-                raw documents (no shuffle)
-    doc_lens  — (doc_id, dl)
-    forms     — freq-ordered vocabulary (form_id, term, occs, docs)
-    offsets   — (doc_id, pos, start, end, term) char offsets for render ops
+                raw documents (no shuffle)                 after docs
+    offsets   — (doc_id, pos, start, end, term) char offsets for render
+                ops                                        after docs
     segments0 — compressed per-range posting segments (bucket-partitioned),
-                encoded once at the final segment size
+                encoded once at the final segment size     after docs
+    doc_lens  — (doc_id, dl), then the corpus stats of _meta
+                                                           after postings
+    forms     — freq-ordered vocabulary (form_id, term, occs, docs)
+                                                           after postings
     norms0    — per-segment 1-byte norms at the final segment size
+                                                           after doc_lens
+
+``docs`` runs first. The six stages after it run concurrently, each on
+its own driver thread, so their Spark jobs share the session's cores: a
+stage starts as soon as the stages it reads are written, and its jobs
+keep the caller's job group and carry the description
+``build:<stage>``. A failed stage fails the stages that read it without
+running them; the others run to the end and record their lineage, so a
+re-run into the same ``--out`` runs only what failed. The build then
+raises the first failure.
 
 The final segment size is ``seg_size · merge_group^merge_rounds``. A bulk
 build knows its final layout up front, so it encodes segments once at
@@ -51,6 +65,7 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 # allow `spark-submit alix_spark/build_index.py` / direct script execution
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -82,6 +97,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cpus", default=None)
     args = ap.parse_args(argv)
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     from alix_spark import get_spark, ingest
@@ -129,36 +145,49 @@ def main(argv: list[str] | None = None) -> int:
     docs = ctx.run_stage("docs", fp, build_docs)
     n_docs_total = ctx.record("docs")["rows"]
 
+    from alix_spark.search.bm25 import corpus_stats
+
+    # every stage after docs runs as a task of one DAG, each on its own
+    # driver thread, so their Spark jobs overlap on the session's idle
+    # cores. A task gets the futures of the stages it reads and waits on
+    # them before its run_stage starts the stage's clock, so a failed
+    # stage fails its dependents without running them.
+
     # a posting row depends only on its own document: the map-side
     # kernel tokenizes each Arrow batch and writes finished rows, with
     # no token table and no shuffle between the scan and the sink
-    postings = ctx.run_stage(
-        "postings",
-        fp,
-        lambda: ib.build_postings_from_docs(docs, "doc_id", args.text_col),
-    )
+    def postings():
+        return ctx.run_stage(
+            "postings",
+            fp,
+            lambda: ib.build_postings_from_docs(docs, "doc_id", args.text_col),
+        )
+
     # doc_lens and forms both derive from the materialized postings
     # stage (dl = Σ tf) instead of paying a second pass for lengths
-    doc_lens = ctx.run_stage(
-        "doc_lens", fp, lambda: ib.build_doc_lens_from_postings(postings)
-    )
-    ctx.run_stage("forms", fp, lambda: ib.build_forms(postings))
+    def doc_lens(postings_f):
+        posts = postings_f.result()
+        lens = ctx.run_stage(
+            "doc_lens", fp, lambda: ib.build_doc_lens_from_postings(posts)
+        )
+        return lens, corpus_stats(lens)
+
+    def forms(postings_f):
+        posts = postings_f.result()
+        ctx.run_stage("forms", fp, lambda: ib.build_forms(posts))
 
     # offsets — term vectors with positions AND offsets, persisted so
     # render ops (KWIC/hilite/paint) never re-tokenize the corpus
     # (reference: Alix.java:154-165). Doc-id-sorted within files so a
     # doc-range read prunes on parquet stats.
-    ctx.run_stage(
-        "offsets",
-        fp,
-        lambda: simple.token_offsets(docs, "doc_id", args.text_col)
-        .repartitionByRange(width, F.col("doc_id"))
-        .sortWithinPartitions("doc_id", "pos"),
-    )
-
-    from alix_spark.search.bm25 import corpus_stats
-
-    n_docs, avgdl = corpus_stats(doc_lens)
+    def offsets():
+        ctx.run_stage(
+            "offsets",
+            fp,
+            lambda: simple.token_offsets(docs, "doc_id", args.text_col)
+            .repartitionByRange(width, F.col("doc_id"))
+            .sortWithinPartitions("doc_id", "pos"),
+        )
 
     # segments0 is the single-pass build shuffling raw documents: one
     # corpus-sized exchange, encoded at the final size. Its norm rows are
@@ -168,32 +197,56 @@ def main(argv: list[str] | None = None) -> int:
     # hash-partitions by bucket at the session's width, so every bucket
     # dir gets one file (the file-commit count is a serial cost and a
     # query-side open cost) without one task per bucket.
-    ctx.run_stage(
-        "segments0",
-        fp_segments,
-        lambda: seg_mod.build_single_pass_from_docs(
-            docs.select("doc_id", args.text_col),
-            text_col=args.text_col,
-            seg_size=seg_size,
-            n_buckets=args.buckets,
+    def segments0():
+        ctx.run_stage(
+            "segments0",
+            fp_segments,
+            lambda: seg_mod.build_single_pass_from_docs(
+                docs.select("doc_id", args.text_col),
+                text_col=args.text_col,
+                seg_size=seg_size,
+                n_buckets=args.buckets,
+            )
+            .filter(F.col("term") != seg_mod.NORM_MARKER)
+            .repartition(width, F.col("bucket")),
+            partition_by=["bucket"],
         )
-        .filter(F.col("term") != seg_mod.NORM_MARKER)
-        .repartition(width, F.col("bucket")),
-        partition_by=["bucket"],
-    )
+
     # norms0 from the (one row per doc) doc_lens table, not the corpus;
     # every doc also enters with dl 0 so a segment of only empty docs
     # still gets its norm row, exactly as the single-pass kernel emits
-    ctx.run_stage(
-        "norms0",
-        fp_norms,
-        lambda: seg_mod.build_norms(
-            doc_lens.unionByName(
-                docs.select("doc_id", F.lit(0).cast("int").alias("dl"))
+    def norms0(doc_lens_f):
+        lens, _ = doc_lens_f.result()
+        ctx.run_stage(
+            "norms0",
+            fp_norms,
+            lambda: seg_mod.build_norms(
+                lens.unionByName(
+                    docs.select("doc_id", F.lit(0).cast("int").alias("dl"))
+                ),
+                seg_size=seg_size,
             ),
-            seg_size=seg_size,
-        ),
-    )
+        )
+
+    # one worker per stage after docs: the DAG's width. Each task carries
+    # the caller's local properties (job group, description) onto its
+    # thread, so its jobs stay attributable.
+    with ThreadPoolExecutor(max_workers=6) as pool:
+
+        def start(task, *inputs):
+            return pool.submit(inheritable_thread_target(spark)(task), *inputs)
+
+        postings_f = start(postings)
+        offsets_f = start(offsets)
+        segments0_f = start(segments0)
+        doc_lens_f = start(doc_lens, postings_f)
+        forms_f = start(forms, postings_f)
+        norms0_f = start(norms0, doc_lens_f)
+    # every task has ended; raise the first failure in submission order,
+    # a root cause, since a dependent re-raises its input's error
+    for future in (postings_f, offsets_f, segments0_f, doc_lens_f, forms_f, norms0_f):
+        future.result()
+    _, (n_docs, avgdl) = doc_lens_f.result()
 
     # meta + consolidated lineage/metrics, written by the driver in the
     # layout of a one-partition Spark write

@@ -16,7 +16,9 @@ build persisted are unpersisted. Its record comes from what
 the write left on disk — ``rows`` from the parquet footers, ``bytes``
 and ``files`` from the part files — and the stage is read back with the
 schema of the frame it wrote, so no count job and no schema-inference
-job follow the write. The consolidated ``_lineage_table`` and
+job follow the write. The stage's jobs carry the job description
+``build:<stage>``, which tells them apart when stages run concurrently.
+The consolidated ``_lineage_table`` and
 ``_metrics`` tables are written by the driver (one ``part-00000``
 parquet file plus ``_SUCCESS``, the layout a one-partition Spark write
 leaves), not by Spark jobs.
@@ -29,6 +31,7 @@ idempotently (mode=overwrite).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import shutil
 import time
@@ -122,6 +125,21 @@ class BuildContext:
         tmp.write_text(json.dumps(rec))
         tmp.rename(path)
 
+    @contextlib.contextmanager
+    def _described(self, description: str):
+        """Label the calling thread's jobs ``description`` in the block,
+        then restore its previous label. Stages run concurrently, so the
+        job description, not a time window, tells their jobs apart; the
+        job group stays the caller's."""
+        sc = self.spark.sparkContext
+        key = "spark.job.description"
+        before = sc.getLocalProperty(key)
+        sc.setLocalProperty(key, description)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(key, before)
+
     def out_path(self, stage: str) -> str:
         return f"{self.index_dir}/{stage}"
 
@@ -140,7 +158,7 @@ class BuildContext:
         t0 = time.time()
         # what the build caches (row numbering, vocabulary stats) is
         # released once the write has committed
-        with release_after():
+        with release_after(), self._described(f"build:{stage}"):
             df = build()
             writer = df.write.mode("overwrite")
             if partition_by:

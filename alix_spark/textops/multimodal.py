@@ -771,10 +771,13 @@ def decode_video_frames(payload: bytes) -> tuple[list[bytes], float]:
     """Extract the frame payloads of a Motion-JPEG AVI → (frames, fps).
 
     Walks RIFF/AVI structure: the ``hdrl`` LIST's ``avih`` gives the
-    frame period, the ``movi`` LIST's ``00dc``/``00db`` chunks carry
-    one JPEG per frame (the MJPG layout). Frames are returned as raw
-    JPEG bytes so the caller picks the sampling rate BEFORE paying any
-    decode cost — the frame-sample pattern of a 100 TB video pipeline.
+    frame period, and its ``strl`` lists' ``strh`` headers give each
+    stream's type in stream order. The ``movi`` LIST's ``NNdc``/``NNdb``
+    chunks of the first ``vids`` stream ``NN`` carry one JPEG per frame
+    (the MJPG layout); a file with no ``strh`` is read as stream 0.
+    Frames are returned as raw JPEG bytes so the caller picks the
+    sampling rate BEFORE paying any decode cost — the frame-sample
+    pattern of a 100 TB video pipeline.
     Other codecs (H.264, VP9…) genuinely need codec libraries — any
     non-JPEG frame payload raises at decode time, and a non-AVI
     container raises here."""
@@ -783,7 +786,8 @@ def decode_video_frames(payload: bytes) -> tuple[list[bytes], float]:
             "only RIFF/AVI (Motion-JPEG) video decodes natively"
         )
     fps = 0.0
-    frames: list[bytes] = []
+    stream_types: list[bytes] = []
+    chunks: list[tuple[bytes, bytes]] = []  # (stream id, body)
 
     def walk(start: int, end: int) -> None:
         nonlocal fps
@@ -799,15 +803,23 @@ def decode_video_frames(payload: bytes) -> tuple[list[bytes], float]:
                     payload[body_start : body_start + 4], "little"
                 )
                 fps = 1e6 / usec if usec else 0.0
-            elif cid in (b"00dc", b"00db"):
-                # full stream-0 ids only: a cid[2:4] suffix match would
-                # also concatenate 01dc/xxdb chunks of OTHER streams
-                # into the frame list in multi-stream AVIs
-                frames.append(payload[body_start : body_start + ln])
+            elif cid == b"strh" and ln >= 4:
+                stream_types.append(payload[body_start : body_start + 4])
+            elif cid[2:4] in (b"dc", b"db"):
+                chunks.append((cid[:2], payload[body_start : body_start + ln]))
             i = body_start + ln + (ln & 1)  # word alignment
 
     walk(12, len(payload))
-    return frames, fps
+    if not stream_types:
+        video = 0
+    elif b"vids" in stream_types:
+        video = stream_types.index(b"vids")
+    else:
+        return [], fps
+    # the video stream's ids only: frames of other streams (a second
+    # video track) never join its frame list
+    sid = b"%02d" % video
+    return [body for cid, body in chunks if cid == sid], fps
 
 
 def encode_mjpeg_avi(frames: list[bytes], fps: float = 25.0) -> bytes:

@@ -168,6 +168,101 @@ def test_changed_seg_size_reruns_segments_and_norms(
     assert r.segments.agg(F.max("seg_id")).first()[0] == 499 // 128
 
 
+STAGES = {"docs", "postings", "doc_lens", "forms", "offsets", "segments0", "norms0"}
+
+
+def _copy_with_docs_only(built_index: str, out: Path) -> str:
+    """A copy of the built index whose stages after docs have no lineage
+    record, so a build into it resumes docs and runs the other six."""
+    shutil.copytree(built_index, out)
+    for rec in (out / "_lineage").glob("*.json"):
+        if rec.stem != "docs":
+            rec.unlink()
+    return str(out)
+
+
+class StageFailed(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize(
+    "failing, builder, unrun",
+    [
+        ("forms", "build_forms", {"forms"}),
+        (
+            "postings",
+            "build_postings_from_docs",
+            {"postings", "doc_lens", "forms", "norms0"},
+        ),
+    ],
+)
+def test_failed_stage_fails_only_what_reads_it(
+    spark, src_docs, built_index, tmp_path, failing, builder, unrun
+):
+    """A stage that raises fails the stages that read it without running
+    them; every other stage still runs and records its lineage. The build
+    re-raises the error, and a clean re-run into the same --out runs
+    exactly the stages left without a record."""
+    from alix_spark.index import build as ib
+
+    out = _copy_with_docs_only(built_index, tmp_path / "idx")
+
+    def fail(*args, **kwargs):
+        raise StageFailed(failing)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ib, builder, fail)
+        with pytest.raises(StageFailed, match=failing):
+            build_index.main(_cli_args(src_docs, out))
+    assert set(_lineage(out)) == STAGES - unrun
+
+    ran = []
+    record = BuildContext._record
+
+    def recording(self, stage, rec):
+        ran.append(stage)
+        record(self, stage, rec)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(BuildContext, "_record", recording)
+        assert build_index.main(_cli_args(src_docs, out)) == 0
+    assert sorted(ran) == sorted(unrun)
+    assert set(_lineage(out)) == STAGES
+
+
+def test_independent_stages_overlap(spark, src_docs, built_index, tmp_path):
+    """postings, offsets and segments0 read only docs and run together:
+    their lineage windows (record mtime minus wall_ms, as a benchmark
+    ledger computes them) overlap pairwise. Every job of the build keeps
+    the caller's job group, and each stage's jobs are described
+    ``build:<stage>``."""
+    out = _copy_with_docs_only(built_index, tmp_path / "idx")
+    sc = spark.sparkContext
+    sc.setJobGroup("test-overlap", "overlap")
+    try:
+        assert build_index.main(_cli_args(src_docs, out)) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    windows = {}
+    for stage in ("postings", "offsets", "segments0"):
+        path = Path(out) / "_lineage" / f"{stage}.json"
+        end = path.stat().st_mtime
+        windows[stage] = (end - json.loads(path.read_text())["wall_ms"] / 1000, end)
+    for a, (a0, a1) in windows.items():
+        for b, (b0, b1) in windows.items():
+            assert a0 < b1, (a, b, windows)
+
+    described = set()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # a Scala Seq
+    for i in range(jobs.size()):
+        group, desc = jobs.apply(i).jobGroup(), jobs.apply(i).description()
+        if group.isDefined() and group.get() == "test-overlap":
+            described.add(desc.get() if desc.isDefined() else None)
+    # jobs outside a stage (the input's footer read, corpus_stats after
+    # the doc_lens write) keep the caller's description
+    assert described == {f"build:{s}" for s in STAGES - {"docs"}} | {"overlap"}
+
+
 def test_fingerprint_change_invalidates(spark, src_docs, built_index):
     """A different input fingerprint must re-run stages, not reuse them."""
     ctx = BuildContext(spark, built_index)

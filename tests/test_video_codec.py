@@ -71,3 +71,30 @@ def test_video_stats_kernel(spark):
     assert r0["mean_luma_last"] == pytest.approx(160.0)
     r1 = rows[1]
     assert r1["n_frames"] == 2 and (r1["height"], r1["width"]) == (8, 24)
+
+
+def test_video_stream_after_audio_stream():
+    """An AVI declaring its audio stream first carries frames as 01dc
+    chunks between 00wb audio chunks: the first vids stream's chunks
+    are the frames."""
+
+    def chunk(cid: bytes, body: bytes) -> bytes:
+        return cid + len(body).to_bytes(4, "little") + body + (
+            b"\x00" if len(body) & 1 else b""
+        )
+
+    def strl(fcc_type: bytes) -> bytes:
+        return chunk(b"LIST", b"strl" + chunk(b"strh", fcc_type + bytes(52)))
+
+    frames = _clip(3)
+    avih = chunk(b"avih", (40000).to_bytes(4, "little") + bytes(52))
+    hdrl = chunk(b"LIST", b"hdrl" + avih + strl(b"auds") + strl(b"vids"))
+    movi = chunk(
+        b"LIST",
+        b"movi"
+        + b"".join(chunk(b"00wb", b"pcm!" * 3) + chunk(b"01dc", f) for f in frames),
+    )
+    body = b"AVI " + hdrl + movi
+    got, fps = decode_video_frames(b"RIFF" + len(body).to_bytes(4, "little") + body)
+    assert fps == pytest.approx(25.0, rel=1e-4)
+    assert [bytes(f) for f in got] == [bytes(f) for f in frames]
