@@ -434,7 +434,7 @@ def q_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     c = _corpus(spark, sf_dir)
     segs, _ = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(c.tokens, seg_size=1024)
+        seg_mod.build_single_pass_from_docs(c.docs, "text", seg_size=1024)
     )
     return phrase_search(segs, ["part", "filter"]).orderBy("doc_id")
 
@@ -598,7 +598,7 @@ def _index_reader(spark: SparkSession, sf_dir: str):
     if not os.path.exists(f"{out}/norms/_SUCCESS"):
         c = _corpus(spark, sf_dir)
         segs, norms = seg_mod.split_single_pass(
-            seg_mod.build_single_pass(c.tokens, seg_size=1024)
+            seg_mod.build_single_pass_from_docs(c.docs, "text", seg_size=1024)
         )
         segs.write.mode("overwrite").parquet(f"{out}/segments")
         norms.write.mode("overwrite").parquet(f"{out}/norms")

@@ -16,6 +16,11 @@ Equivalent DuckDB SQL (used by the oracles)::
          LATERAL (SELECT unnest(toks) AS term,
                          generate_subscripts(toks, 1) AS pos) u
 
+The Arrow kernels that tokenize inside a batch (map-side postings, the
+segment builder, offsets, dedup) use the chain's Python twin
+:data:`TOKEN_RE`, through :func:`split_text` per text and
+:func:`tokenize_batch` per batch, and give the same tokens.
+
 Alix analogue: the tokenizer contract of
 ``/root/reference/java/alix/lucene/analysis/FrTokenizer.java`` (emit terms
 with sequential positions); the French-specific rules live in
@@ -24,10 +29,17 @@ with sequential positions); the French-specific rules live in
 
 from __future__ import annotations
 
+import re
+from itertools import chain
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
+# the Python twin of TOKEN_SPLIT_RE: the tokens are the maximal runs
+# that the split leaves
+TOKEN_RE = re.compile("[a-z0-9]+")
 
 
 def tokens_array(text: Column) -> Column:
@@ -41,6 +53,33 @@ def tokens_array(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT_RE), lambda x: x != "")
 
 
+def split_text(text: str | None) -> list[str]:
+    """One text's tokens in order, the Python twin of
+    :func:`tokens_array` (a null text has none)."""
+    return TOKEN_RE.findall((text or "").lower())
+
+
+def _occurrences(
+    doc_ids, per_doc: list[list]
+) -> tuple[np.ndarray, list, np.ndarray]:
+    """Per-document lists → occurrence-aligned ``(doc_ids, items,
+    positions)``: each item beside its document's id and its index in
+    that document's list."""
+    counts = np.fromiter(map(len, per_doc), dtype=np.int64, count=len(per_doc))
+    ids = np.repeat(np.asarray(doc_ids, dtype=np.int64), counts)
+    starts = np.repeat(np.cumsum(counts) - counts, counts)
+    return ids, list(chain.from_iterable(per_doc)), np.arange(ids.size) - starts
+
+
+def tokenize_batch(doc_ids, texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A batch of documents (ids and texts, e.g. the columns of one
+    Arrow batch) → occurrence-aligned ``(doc_ids, terms, positions)``
+    arrays: the rows :func:`tokenize` gives for those documents, in
+    document order. Callers reject null ids first."""
+    ids, terms, pos = _occurrences(doc_ids, [split_text(t) for t in texts])
+    return ids, np.array(terms, dtype=object), pos
+
+
 def token_offsets(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -51,11 +90,9 @@ def token_offsets(
     Alix.java:154-165``): persisted once at build time so render
     operators (KWIC / hilite / paint) read char offsets from the index
     instead of re-tokenizing the corpus per request. Token stream is
-    row-identical to :func:`tokenize` (same ``[a-z0-9]+`` classes on the
-    lowered text); one Arrow kernel, map-only, no shuffle.
+    row-identical to :func:`tokenize` (:data:`TOKEN_RE` on the lowered
+    text); one Arrow kernel, map-only, no shuffle.
     """
-    import re as _re
-
     import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
@@ -64,6 +101,8 @@ def token_offsets(
         StructField,
         StructType,
     )
+
+    from alix_spark.index.build import reject_null_ids
 
     schema = StructType(
         [
@@ -74,39 +113,24 @@ def token_offsets(
             StructField("term", StringType()),
         ]
     )
-    pat = _re.compile(r"[a-z0-9]+")
 
     def kernel(batches):
-        import numpy as np
-
         for pdf in batches:
-            # columnar accumulation: per-doc span arrays concatenated
-            # once per batch — the row-tuple formulation built one
-            # Python tuple per TOKEN and paid a row-wise DataFrame
-            # construction on top (guide §4.2)
-            doc_arrs, pos_arrs, span_arrs = [], [], []
-            terms: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                lowered = (text or "").lower()
-                spans = [m.span() for m in pat.finditer(lowered)]
-                if not spans:
-                    continue
-                n = len(spans)
-                doc_arrs.append(np.full(n, int(doc_id), dtype=np.int64))
-                pos_arrs.append(np.arange(n, dtype=np.int32))
-                sp = np.asarray(spans, dtype=np.int32)
-                span_arrs.append(sp)
-                terms.extend(lowered[s:e] for s, e in spans)
-            if not doc_arrs:
+            reject_null_ids(pdf["doc_id"], id_col)
+            ids, matches, pos = _occurrences(
+                pdf["doc_id"],
+                [list(TOKEN_RE.finditer((t or "").lower())) for t in pdf["text"]],
+            )
+            if ids.size == 0:
                 continue
-            sp = np.concatenate(span_arrs)
+            spans = np.array([m.span() for m in matches], dtype=np.int32)
             yield pd.DataFrame(
                 {
-                    "doc_id": np.concatenate(doc_arrs),
-                    "pos": np.concatenate(pos_arrs),
-                    "start": sp[:, 0],
-                    "end": sp[:, 1],
-                    "term": np.asarray(terms, dtype=object),
+                    "doc_id": ids,
+                    "pos": pos.astype(np.int32),
+                    "start": spans[:, 0],
+                    "end": spans[:, 1],
+                    "term": np.array([m.group() for m in matches], dtype=object),
                 }
             )
 

@@ -32,18 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def build_postings(tokens: DataFrame, positions: bool = True) -> DataFrame:
-    """(doc_id, pos, term) → (term, doc_id, tf[, positions:array<int>]).
-
-    ``positions=False`` is Lucene's DOCS_AND_FREQS mode
-    (``/root/reference/java/alix/lucene/Alix.java:167-176`` meta fields):
-    skips the position-list collection, halving the shuffle for indexes
-    that serve ranked retrieval only.
-    """
-    if not positions:
-        return tokens.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).cast("int").alias("tf")
-        )
+def build_postings(tokens: DataFrame) -> DataFrame:
+    """(doc_id, pos, term) → (term, doc_id, tf, positions:array<int>)."""
     return tokens.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("tf"),
         F.sort_array(F.collect_list("pos")).alias("positions"),
@@ -63,15 +53,12 @@ def reject_null_ids(ids, col: str) -> None:
 
 
 def build_postings_from_docs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    positions: bool = True,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """docs → postings (term, doc_id, tf[, positions]) with NO shuffle.
+    """docs → postings (term, doc_id, tf, positions) with NO shuffle.
 
     Row-identical to ``build_postings(simple.tokenize(docs))`` (pytest
-    cross-check in tests/test_index_build.py), but a posting row depends
+    cross-check in tests/test_mapside_build.py), but a posting row depends
     only on its own document, so the ``(term, doc_id)`` Exchange of the
     token-stream path is pure overhead (guide §2.4): this kernel
     tokenizes each Arrow batch of raw documents and emits the finished
@@ -79,11 +66,10 @@ def build_postings_from_docs(
     corpus bytes (one ~25-byte row per token occurrence) disappears from
     the plan — the scan feeds the kernel feeds the sink.
 
-    Simple analysis chain only (the regex IS the chain); the French
-    kernel keeps its own pipeline.
+    Simple analysis chain only (:func:`simple.tokenize_batch` IS the
+    chain); the French kernel keeps its own pipeline.
     """
-    import re as _re
-
+    import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
@@ -94,68 +80,43 @@ def build_postings_from_docs(
         StructType,
     )
 
+    from alix_spark.analysis.simple import tokenize_batch
+
     # nullability mirrors the groupBy path exactly (schema parity is
     # part of row-identity: the oracle compares schemas)
-    fields = [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), True),
-        StructField("tf", IntegerType(), False),
-    ]
-    if positions:
-        fields.append(
-            StructField(
-                "positions", ArrayType(IntegerType(), False), False
-            )
-        )
-    schema = StructType(fields)
-    tok_re = _re.compile(r"[a-z0-9]+")
-    want_pos = positions
+    schema = StructType(
+        [
+            StructField("term", StringType(), False),
+            StructField("doc_id", LongType(), True),
+            StructField("tf", IntegerType(), False),
+            StructField("positions", ArrayType(IntegerType(), False), False),
+        ]
+    )
 
     def kernel(batches):
-        import numpy as np
-
-        cols = ["term", "doc_id", "tf"] + (["positions"] if want_pos else [])
         for pdf in batches:
             reject_null_ids(pdf["doc_id"], id_col)
-            doc_arrs: list[np.ndarray] = []
-            term_arrs: list[str] = []
-            pos_arrs: list[np.ndarray] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):
-                toks = tok_re.findall((text or "").lower())
-                if not toks:
-                    continue
-                n = len(toks)
-                doc_arrs.append(np.full(n, int(doc_id), dtype=np.int64))
-                term_arrs.extend(toks)
-                pos_arrs.append(np.arange(n, dtype=np.int64))
-            if not doc_arrs:
+            d, terms, p = tokenize_batch(pdf["doc_id"], pdf["_text"])
+            if d.size == 0:
                 continue
-            d = np.concatenate(doc_arrs)
-            p = np.concatenate(pos_arrs)
-            codes, uniques = pd.factorize(
-                np.asarray(term_arrs, dtype=object), sort=False
-            )
+            codes, uniques = pd.factorize(terms, sort=False)
             # group by (doc, term-code); positions sort last so each
             # run's occurrences come out ascending
             order = np.lexsort((p, codes, d))
             c = codes[order]
             dd = d[order]
-            pp = p[order]
             is_new = np.empty(c.size, dtype=bool)
             is_new[0] = True
             is_new[1:] = (c[1:] != c[:-1]) | (dd[1:] != dd[:-1])
             starts = np.flatnonzero(is_new)
-            tfs = np.diff(np.append(starts, c.size)).astype(np.int32)
-            out = {
-                "term": uniques[c[starts]],
-                "doc_id": dd[starts],
-                "tf": tfs,
-            }
-            if want_pos:
-                out["positions"] = np.split(
-                    pp.astype(np.int32), starts[1:]
-                )
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(
+                {
+                    "term": uniques[c[starts]],
+                    "doc_id": dd[starts],
+                    "tf": np.diff(np.append(starts, c.size)).astype(np.int32),
+                    "positions": np.split(p[order].astype(np.int32), starts[1:]),
+                }
+            )
 
     d = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
@@ -204,7 +165,7 @@ def build_doc_lens_from_postings(postings: DataFrame) -> DataFrame:
     )
 
 
-def build_forms(postings: DataFrame, assign_ids: bool = True) -> DataFrame:
+def build_forms(postings: DataFrame) -> DataFrame:
     """postings → (form_id, term, occs, docs).
 
     ``occs`` = corpus term frequency, ``docs`` = document frequency.
@@ -216,8 +177,6 @@ def build_forms(postings: DataFrame, assign_ids: bool = True) -> DataFrame:
         F.sum("tf").cast("long").alias("occs"),
         F.count(F.lit(1)).cast("long").alias("docs"),
     )
-    if not assign_ids:
-        return stats
     return rank_forms(stats)
 
 

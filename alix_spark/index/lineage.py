@@ -24,9 +24,11 @@ parquet file plus ``_SUCCESS``, the layout a one-partition Spark write
 leaves), not by Spark jobs.
 
 Spark-native atomicity: parquet writes commit via the Hadoop output
-committer (_SUCCESS marker); the lineage record is written only after
-the data commit, so a crash between the two re-runs the stage
-idempotently (mode=overwrite).
+committer (_SUCCESS marker); a stage's old record is deleted before its
+write starts and the new one is written only after the data commit, so
+a crash or a failed write anywhere in between re-runs the stage
+idempotently (mode=overwrite) instead of reloading a table the failed
+write emptied.
 """
 
 from __future__ import annotations
@@ -155,6 +157,9 @@ class BuildContext:
         out = self.out_path(stage)
         if self.stage_done(stage, fingerprint):
             return read_table(self.spark, out, stage_schema(self.index_dir, stage))
+        # the overwrite empties ``out`` first: a record left behind by an
+        # earlier run would mark a failed re-run's table done
+        _lineage_path(self.index_dir, stage).unlink(missing_ok=True)
         t0 = time.time()
         # what the build caches (row numbering, vocabulary stats) is
         # released once the write has committed

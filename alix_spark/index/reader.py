@@ -208,8 +208,9 @@ class IndexReader:
 
     def phrase(self, terms: list[str]) -> DataFrame:
         """Exact-phrase matching → (doc_id, freq) off the positional
-        segments (requires an index built with positions — the default;
-        the reference's PhraseQuery path, ``Alix.java:154-165``)."""
+        segments (every builder writes positions; an index whose segments
+        have none must be rebuilt — the reference's PhraseQuery path,
+        ``Alix.java:154-165``)."""
         from alix_spark.search.phrase import phrase_search
 
         return phrase_search(self.segments, terms, n_buckets=self.n_buckets)

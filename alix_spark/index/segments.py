@@ -7,7 +7,7 @@ Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
   segments (``/root/reference/java/alix/lucene/XMLIndexer.java:334-335``)
   and simultaneously the skew defense: a hot term ("the", "{") contributes
   at most ``seg_size`` postings to any (seg, term) group, so no reducer
-  ever sees a full Zipf-head posting list. The (seg_id, term) shuffle IS
+  ever sees a full Zipf-head posting list. The build's seg_id shuffle IS
   the salted repartition-by-term of the north rule, with the salt chosen
   to be the doc range so that segments stay directly concatenable.
 * Within a (segment, term): doc ids are delta-gap + varbyte encoded in
@@ -16,7 +16,9 @@ Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
   (:func:`decode_blocks`) and score every posting; no reader uses
   ``max_tf``/``min_dl``, which stay in the index format.
   The encoder reads no corpus-global statistic, which is what makes the
-  single-pass build possible.
+  single-pass build possible: one builder,
+  :func:`build_single_pass_from_docs`, shuffles the raw documents by
+  ``seg_id`` and tokenizes them inside each segment's kernel.
 * **Norms**: one byte per doc per segment (Lucene's norm layout), the
   SmallFloat byte4 of the doc length.
 * **Merge**: segments with disjoint, ordered doc ranges merge by decode +
@@ -39,7 +41,8 @@ Schema of the postings-segment table (one row per term-block):
     min_dl: long       -- block min quantized doc len (no reader)
     sum_tf: long       -- block tf total (forms table derives from this)
     positions: binary  -- varbyte(per-doc delta(positions)), tf values per
-                          posting; b"" when built without positions
+                          posting; b"" in segments written without
+                          positions (every builder now writes them)
 
 Positions (the reference's DOCS_AND_FREQS_AND_POSITIONS,
 ``/root/reference/java/alix/lucene/Alix.java:154-165``): each posting's
@@ -70,6 +73,7 @@ from pyspark.sql.types import (
 
 from alix_spark.index import codec
 from alix_spark.index.build import reject_null_ids
+from alix_spark.index.xxhash import term_bucket
 
 BLOCK = 128
 DEFAULT_SEG_SIZE = 8192
@@ -187,54 +191,13 @@ def encode_blocks(
     )
 
 
-def build_segments(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Two-stage path: uncompressed postings (term, doc_id, tf) →
-    compressed segment rows. Grouped by (seg_id, bucket): group size ≈
-    (postings in segment)/n_buckets — bounded for any term skew; per-group
-    Spark/Arrow overhead amortized over ~vocab/n_buckets terms.
-    """
-    from alix_spark.search.bm25 import with_quantized_dl
-
-    dlq = with_quantized_dl(doc_lens).withColumnRenamed("dl", "dl_q")
-    p = (
-        postings.select("term", "doc_id", "tf")
-        .join(dlq, "doc_id")
-        .withColumn("seg_id", (F.col("doc_id") / seg_size).cast("long"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
-    )
-
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(pdf["seg_id"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        pdf = pdf.sort_values(["term", "doc_id"])
-        terms = pdf["term"].to_numpy()
-        starts = np.concatenate(([0], np.flatnonzero(terms[1:] != terms[:-1]) + 1))
-        return encode_blocks(
-            seg_id,
-            terms[starts],
-            np.full(starts.size, bucket),
-            starts,
-            pdf["doc_id"].to_numpy(np.uint64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["dl_q"].to_numpy(np.int64),
-        )
-
-    return p.groupBy("seg_id", "bucket").applyInPandas(encode_group, SEGMENT_SCHEMA)
-
-
 def build_norms(doc_lens: DataFrame, seg_size: int = DEFAULT_SEG_SIZE) -> DataFrame:
     """doc_lens → per-segment norm-byte arrays (1 byte/doc, Lucene
     layout). Docs with no tokens get norm byte 0. A ``dl == 0`` row only
     marks its segment as present: a segment of empty docs still gets a
     row (``n_docs`` 0), and trailing empty docs do not extend the array
-    — the norm rows of the single-pass kernels, byte for byte."""
+    — the norm rows of :func:`build_single_pass_from_docs`, byte for
+    byte."""
 
     def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
         seg_id = int(pdf["seg_id"].iloc[0])
@@ -257,16 +220,18 @@ def build_norms(doc_lens: DataFrame, seg_size: int = DEFAULT_SEG_SIZE) -> DataFr
     )
 
 
-def _encode_segment_tokens(
+def _encode_segment(
     seg_id: int,
-    tok_pdf: pd.DataFrame,
-    n_buckets: int,
     seg_size: int,
-    term_bucket_fn,
-) -> tuple[list[tuple], tuple]:
-    """Shared kernel: one segment's (doc_id, term) rows → (block rows,
-    norm row). Computes per-doc lengths locally (a doc lives in exactly
-    one segment, so the group sees all its tokens).
+    n_buckets: int,
+    docs_raw: np.ndarray,
+    terms_raw: np.ndarray,
+    pos_raw: np.ndarray,
+) -> tuple[pd.DataFrame, tuple]:
+    """One segment's occurrence-aligned (doc_id, term, pos) arrays →
+    (block rows, norm row). Computes per-doc lengths locally (a doc
+    lives in exactly one segment, so the group sees all its tokens); a
+    segment with no tokens gives no block rows and an empty norm row.
 
     Pure numpy (factorize + lexsort + run-length) instead of pandas
     groupby: ~2× less memory traffic, which matters both for absolute
@@ -274,10 +239,7 @@ def _encode_segment_tokens(
     before it is CPU-bound).
     """
     first = seg_id * seg_size
-    codes, uniques = pd.factorize(tok_pdf["term"].to_numpy(), sort=True)
-    docs_raw = tok_pdf["doc_id"].to_numpy(np.int64)
-    has_pos = "pos" in tok_pdf.columns
-    pos_raw = tok_pdf["pos"].to_numpy(np.int64) if has_pos else None
+    codes, uniques = pd.factorize(terms_raw, sort=True)
 
     # per-doc exact lengths -> norm bytes -> quantized lengths
     dl_counts = np.bincount(docs_raw - first)
@@ -295,11 +257,7 @@ def _encode_segment_tokens(
 
     # (term, doc) run-length counts over the lexsorted triples; positions
     # sort last so each run's occurrences come out position-ordered
-    order = (
-        np.lexsort((pos_raw, docs_raw, codes))
-        if has_pos
-        else np.lexsort((docs_raw, codes))
-    )
+    order = np.lexsort((pos_raw, docs_raw, codes))
     c = codes[order]
     d = docs_raw[order]
     if c.size == 0:
@@ -313,22 +271,19 @@ def _encode_segment_tokens(
     gd = d[starts_rl].astype(np.uint64)
     dl_q = dl_all[(gd.astype(np.int64) - first)]
 
-    pos_deltas = None
-    if has_pos:
-        # per-run delta encoding: first position absolute, then gaps —
-        # one vectorized diff with the run starts reset to absolutes
-        p = pos_raw[order].astype(np.int64)
-        deltas = np.empty_like(p)
-        deltas[0] = p[0]
-        deltas[1:] = p[1:] - p[:-1]
-        deltas[starts_rl] = p[starts_rl]
-        pos_deltas = deltas.astype(np.uint64)
+    # per-run delta encoding: first position absolute, then gaps — one
+    # vectorized diff with the run starts reset to absolutes
+    p = pos_raw[order].astype(np.int64)
+    deltas = np.empty_like(p)
+    deltas[0] = p[0]
+    deltas[1:] = p[1:] - p[:-1]
+    deltas[starts_rl] = p[starts_rl]
 
     t_starts = np.concatenate(([0], np.flatnonzero(gc[1:] != gc[:-1]) + 1))
     terms = uniques[gc[t_starts]]
-    buckets = [term_bucket_fn(term, n_buckets) for term in terms]
+    buckets = [term_bucket(term, n_buckets) for term in terms]
     rows = encode_blocks(
-        seg_id, terms, buckets, t_starts, gd, tfs, dl_q, pos_deltas
+        seg_id, terms, buckets, t_starts, gd, tfs, dl_q, deltas.astype(np.uint64)
     )
     return rows, norm_row
 
@@ -345,100 +300,47 @@ def _with_norm_row(rows: pd.DataFrame, norm: tuple) -> pd.DataFrame:
     return pd.concat([rows, marker], ignore_index=True) if len(rows) else marker
 
 
-def build_single_pass(
-    tokens: DataFrame,
-    seg_size: int = DEFAULT_SEG_SIZE,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """ONE-shuffle index build: the token stream grouped by segment; each
-    kernel computes tf + doc lengths + norms locally and emits block rows
-    PLUS one norm marker row (term == NORM_MARKER, norm bytes in
-    ``doc_gaps``, sum_dl in ``min_dl``, n_docs in ``n``).
-
-    Split the output with :func:`split_single_pass`; derive the forms
-    table with :func:`forms_from_segments`. No corpus-global statistic is
-    read or written by the kernel — this is the maximally-scalable build
-    (everything after the one shuffle is embarrassingly parallel).
-    """
-    from alix_spark.index.xxhash import term_bucket
-
-    cols_in = ["doc_id", "term"] + (
-        ["pos"] if "pos" in tokens.columns else []
-    )
-    t = tokens.select(*cols_in).withColumn(
-        "seg_id", (F.col("doc_id") / seg_size).cast("long")
-    )
-
-    def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _empty_segment_frame()
-        seg_id = int(pdf["seg_id"].iloc[0])
-        # norm rows live in bucket -1 (own partition dir)
-        return _with_norm_row(
-            *_encode_segment_tokens(seg_id, pdf, n_buckets, seg_size, term_bucket)
-        )
-
-    return t.groupBy("seg_id").applyInPandas(encode_seg, SEGMENT_SCHEMA)
-
-
 def build_single_pass_from_docs(
     docs: DataFrame,
     text_col: str = "content",
     seg_size: int = DEFAULT_SEG_SIZE,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
-    """Single-pass build that shuffles RAW DOCUMENTS, not exploded tokens.
+    """ONE-shuffle index build of the simple chain: raw documents
+    ``(doc_id, text)`` grouped by segment. Each kernel tokenizes its
+    segment's Arrow batch (:func:`simple.tokenize_batch`, C-speed regex
+    per document), computes tf + positions + doc lengths + norms
+    locally and emits block rows PLUS one norm marker row (term ==
+    NORM_MARKER, norm bytes in ``doc_gaps``, sum_dl in ``min_dl``,
+    n_docs in ``n``).
 
-    The one exchange of :func:`build_single_pass` carries the token table
-    — ~4× the corpus bytes (one ~25-byte row per occurrence). Here the
-    groupBy(seg_id) shuffles ``(doc_id, text)`` instead — corpus-sized —
-    and the kernel tokenizes inside the Arrow batch (C-speed regex per
-    document, never per-row Python semantics: the whole batch is one
-    pandas pass). Same output as ``build_single_pass`` over
-    ``simple.tokenize`` (property-tested), with the shuffle shrunk to the
-    theoretical minimum for a doc-range-partitioned index.
-
-    Use this for the simple analysis chain; the French chain keeps the
-    token-table path (its kernel already produced the tokens).
+    The exchange carries the documents — corpus-sized — not the token
+    table, which is ~4× the corpus bytes (one ~25-byte row per
+    occurrence): the shuffle at its theoretical minimum for a
+    doc-range-partitioned index. Split the output with
+    :func:`split_single_pass`; derive the forms table with
+    :func:`forms_from_segments`. No corpus-global statistic is read or
+    written by the kernel — everything after the one shuffle is
+    embarrassingly parallel. A segment whose docs have no tokens keeps
+    its norm row. Pinned by the digest golden of
+    tests/test_segment_golden.py.
     """
-    import re as _re
-
-    from alix_spark.index.xxhash import term_bucket
+    from alix_spark.analysis.simple import tokenize_batch
 
     t = docs.select(
         F.col("doc_id"), F.col(text_col).alias("_text")
     ).withColumn("seg_id", (F.col("doc_id") / seg_size).cast("long"))
-    tok_re = _re.compile(r"[a-z0-9]+")
 
     def encode_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _empty_segment_frame()
         reject_null_ids(pdf["doc_id"], "doc_id")
         seg_id = int(pdf["seg_id"].iloc[0])
-        doc_arrs, term_arrs, pos_arrs = [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):
-            toks = tok_re.findall((text or "").lower())
-            if not toks:
-                continue
-            n = len(toks)
-            doc_arrs.append(np.full(n, int(doc_id), dtype=np.int64))
-            term_arrs.extend(toks)
-            pos_arrs.append(np.arange(n, dtype=np.int64))
-        if not doc_arrs:
-            # keep the norm row so empty-doc segments stay represented
-            return _with_norm_row(
-                _empty_segment_frame(), (seg_id, seg_id * seg_size, 0, 0, b"")
-            )
-        tok_pdf = pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_arrs),
-                "term": np.asarray(term_arrs, dtype=object),
-                "pos": np.concatenate(pos_arrs),
-            }
-        )
+        # norm rows live in bucket -1 (own partition dir)
         return _with_norm_row(
-            *_encode_segment_tokens(
-                seg_id, tok_pdf, n_buckets, seg_size, term_bucket
+            *_encode_segment(
+                seg_id,
+                seg_size,
+                n_buckets,
+                *tokenize_batch(pdf["doc_id"], pdf["_text"]),
             )
         )
 
@@ -638,8 +540,8 @@ def merge_segments(
             # hint of which merge lost them — fail loudly at the merge
             raise ValueError(
                 f"merge_segments: merged seg {new_seg_id} mixes positional "
-                "and positions-free source segments; rebuild the "
-                "positions-free segment with a 'pos' column before merging"
+                "and positions-free source segments; rebuild the index "
+                "(every builder writes positions) before merging"
             )
         run_lens = [sum(p[0].size for p in term_parts) for term_parts in parts]
         doc_ids = np.concatenate([p[0] for p in flat])

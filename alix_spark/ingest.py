@@ -67,8 +67,7 @@ def release_after():
 
 
 def scalable_row_number(
-    df: DataFrame, order_cols: list, out_col: str, start: int = 0,
-    persist: bool = True,
+    df: DataFrame, order_cols: list, out_col: str, start: int = 0
 ) -> DataFrame:
     """Global dense row number without a single-partition window.
 
@@ -77,8 +76,8 @@ def scalable_row_number(
     Scales with the data; the only driver-side state is one count per
     partition. (Used for docId assignment and freq-ordered formIds.)
 
-    ``persist=True`` (default) materializes the range-shuffled
-    partitions (MEMORY_AND_DISK) before the per-partition count job, so
+    The range-shuffled partitions are persisted (MEMORY_AND_DISK)
+    before the per-partition count job, so
 
     * the map stage of the range exchange runs ONCE instead of once for
       the count job and again for the downstream consumer — on a local
@@ -88,9 +87,7 @@ def scalable_row_number(
     * the counts and the returned rows come from the SAME boundary
       draw — ``repartitionByRange`` samples input to pick boundaries,
       and two independent evaluations of the same plan may draw
-      different boundaries; with ``persist=False`` you MUST checkpoint
-      the result before any second downstream evaluation (ids stay a
-      valid dense rank each time, but per-row assignments can differ).
+      different boundaries.
 
     ``build_index.py`` persists the docs stage to parquet (lineage)
     regardless — the cached partitions only live until that write, which
@@ -103,8 +100,7 @@ def scalable_row_number(
     ordered = df.repartitionByRange(n_part, *order_cols).sortWithinPartitions(
         *order_cols
     )
-    if persist:
-        ordered = scoped_persist(ordered, StorageLevel.MEMORY_AND_DISK)
+    ordered = scoped_persist(ordered, StorageLevel.MEMORY_AND_DISK)
     with_pid = ordered.withColumn("_pid", F.spark_partition_id())
     counts = {
         r["_pid"]: r["cnt"]

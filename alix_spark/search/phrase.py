@@ -44,8 +44,8 @@ def _term_positions(
     doc_ids, tfs, deltas = seg_mod.decode_blocks_pos(rows)
     if deltas is None:
         raise ValueError(
-            "segment was built without positions; rebuild with a token "
-            "table that has a 'pos' column"
+            "segment was built without positions; rebuild the index "
+            "(every builder writes positions)"
         )
     tfs = tfs.astype(np.int64)
     bounds = np.concatenate(([0], np.cumsum(tfs)))

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from alix_spark.analysis.simple import tokens_array
+from alix_spark.analysis.simple import split_text, tokens_array
 
 # MinHash permutation family h_i(x) = (a_i * x + b_i) mod 2^31-1.
 # 31-bit universe keeps every intermediate product below 2^62, safe for
@@ -89,7 +89,6 @@ def minhash_signatures(
     Map-only — no shuffle; scales linearly with the corpus.
     """
     import hashlib
-    import re as _re
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -97,7 +96,6 @@ def minhash_signatures(
     params = _perm_params(n_hashes, seed)
     a_vec = [a for a, _ in params]
     b_vec = [b for _, b in params]
-    split_re = _re.compile(r"[^a-z0-9]+")
     mersenne = _MERSENNE
     n_gram = shingle_n
 
@@ -107,7 +105,7 @@ def minhash_signatures(
         b = np.array(b_vec, dtype=np.uint64)
         out = []
         for text in texts:
-            toks = [t for t in split_re.split((text or "").lower()) if t]
+            toks = split_text(text)
             if len(toks) < n_gram:
                 shingle_set = {" ".join(toks)} if toks else {""}
             else:
@@ -255,14 +253,12 @@ def simhash(
     reproducible in SQL for oracle checks.
     """
     import hashlib
-    import re as _re
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
     if hash_fn not in ("blake2b", "md5"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    split_re = _re.compile(r"[^a-z0-9]+")
     n_bits = bits
     use_md5 = hash_fn == "md5"
 
@@ -300,9 +296,7 @@ def simhash(
 
         out = np.zeros(len(texts), dtype=np.int64)
         for row_i, text in enumerate(texts):
-            counts = Counter(
-                t for t in split_re.split((text or "").lower()) if t
-            )
+            counts = Counter(split_text(text))
             if not counts:
                 continue
             n_toks = sum(counts.values())

@@ -271,6 +271,29 @@ def test_fingerprint_change_invalidates(spark, src_docs, built_index):
     assert not ctx.stage_done("docs", f"input:{src_docs}|text_col=content")
 
 
+def test_failed_rerun_forgets_the_old_record(spark, tmp_path):
+    """A re-run whose write fails leaves no record of the stage: the
+    earlier run's record would mark the table that the failed overwrite
+    emptied as done, and the next run with the earlier fingerprint would
+    load the empty table instead of rebuilding it."""
+    from pyspark.sql.functions import udf
+
+    ctx = BuildContext(spark, str(tmp_path / "idx"))
+
+    def ten_rows():
+        return spark.range(10)
+
+    @udf("long")
+    def fail(x):
+        raise RuntimeError("stage write failed")
+
+    assert ctx.run_stage("t", "fp1", ten_rows).count() == 10
+    with pytest.raises(Exception, match="stage write failed"):
+        ctx.run_stage("t", "fp2", lambda: spark.range(10).select(fail("id")))
+    assert ctx.record("t") is None
+    assert ctx.run_stage("t", "fp1", ten_rows).count() == 10
+
+
 def test_sha256_invariant_enforced(spark, tmp_path):
     """A corrupted sha256 column fails the build."""
     import pyspark.sql.functions as F

@@ -25,14 +25,11 @@ N_DOCS = 400
 
 @pytest.fixture(scope="module")
 def v1(spark):
-    from alix_spark.analysis import simple
-
     src = ingest.synthesize_code_corpus(spark, N_DOCS, seed=7)
     docs = ingest.assign_doc_ids(src).cache()
     docs.count()  # pin ids (repartitionByRange sampling)
-    tokens = simple.tokenize(docs, "doc_id", "content")
     segs, norms = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(tokens, seg_size=SEG_SIZE)
+        seg_mod.build_single_pass_from_docs(docs, "content", seg_size=SEG_SIZE)
     )
     return docs, segs.cache(), norms.cache()
 
@@ -156,9 +153,8 @@ def test_random_update_sequence_equals_full_rebuild(spark):
     src = ingest.synthesize_code_corpus(spark, 150, seed=11)
     docs = ingest.assign_doc_ids(src).cache()
     docs.count()
-    tokens = simple.tokenize(docs, "doc_id", "content")
     segs, norms = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(tokens, seg_size=32)
+        seg_mod.build_single_pass_from_docs(docs, "content", seg_size=32)
     )
     segs = segs.cache()
     norms = norms.cache()

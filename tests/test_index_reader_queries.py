@@ -36,7 +36,7 @@ def persisted(spark, corpus, tmp_path_factory):
     lineage starts at the index files, exactly like a production open."""
     out = tmp_path_factory.mktemp("idx")
     segs, norms = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(corpus.tokens, seg_size=64)
+        seg_mod.build_single_pass_from_docs(corpus.docs, "text", seg_size=64)
     )
     segs.write.parquet(str(out / "segments"))
     norms.write.parquet(str(out / "norms"))
@@ -117,7 +117,7 @@ def test_phrase_served_from_reader(corpus, persisted):
     from alix_spark.search.phrase import phrase_search
 
     segs, _ = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(corpus.tokens, seg_size=64)
+        seg_mod.build_single_pass_from_docs(corpus.docs, "text", seg_size=64)
     )
     exp = sorted(
         (r["doc_id"], r["freq"])

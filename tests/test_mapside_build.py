@@ -47,17 +47,6 @@ def test_postings_from_docs_matches_token_path(spark):
     assert new.exceptAll(old).count() == 0
 
 
-def test_postings_from_docs_no_positions(spark):
-    docs = _docs(spark)
-    old = ib.build_postings(
-        simple.tokenize(docs, "doc_id", "text"), positions=False
-    )
-    new = ib.build_postings_from_docs(docs, "doc_id", "text", positions=False)
-    assert old.schema == new.schema
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
-
-
 def test_doc_lens_from_docs_matches_token_path(spark):
     docs = _docs(spark)
     old = ib.build_doc_lens(simple.tokenize(docs, "doc_id", "text"))

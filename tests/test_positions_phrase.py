@@ -26,7 +26,7 @@ def ctx(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     c = Corpus(docs)
     segs, norms = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(c.tokens, seg_size=SEG_SIZE)
+        seg_mod.build_single_pass_from_docs(docs, "text", seg_size=SEG_SIZE)
     )
     return c, segs.cache(), norms
 
@@ -61,7 +61,9 @@ def test_merge_preserves_positions(ctx):
     m1, n1 = seg_mod.merge_segments(segs, norms, group=2)
     m2, _ = seg_mod.merge_segments(m1, n1, group=2)
     direct, _ = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(c.tokens, seg_size=SEG_SIZE * 4)
+        seg_mod.build_single_pass_from_docs(
+            c.docs, "text", seg_size=SEG_SIZE * 4
+        )
     )
     key = ["term", "seg_id", "block_id"]
     a = m2.toPandas().sort_values(key).reset_index(drop=True)
@@ -115,13 +117,11 @@ def test_merge_mixed_positional_raises(spark, ctx):
     (ADVICE r2: a silent degrade surfaces much later as a phrase-query
     'rebuild' error with no hint of which merge dropped positions)."""
     c, segs, norms = ctx
-    # positions-free twin of segment 1's docs, occupying seg_id 1 so the
-    # group=2 merge pairs it with the positional seg 0
-    tok_nopos = c.tokens.filter(
-        (F.col("doc_id") >= SEG_SIZE) & (F.col("doc_id") < 2 * SEG_SIZE)
-    ).drop("pos")
-    free, _ = seg_mod.split_single_pass(
-        seg_mod.build_single_pass(tok_nopos, seg_size=SEG_SIZE)
+    # positions-free twin of segment 1 (its positions blanked, as in a
+    # segment written without them), so the group=2 merge pairs it with
+    # the positional seg 0
+    free = segs.filter(F.col("seg_id") == 1).withColumn(
+        "positions", F.lit(b"")
     )
     mixed = segs.filter(F.col("seg_id") == 0).unionByName(free)
     m, _ = seg_mod.merge_segments(

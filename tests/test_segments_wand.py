@@ -30,10 +30,10 @@ def ctx(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     c = Corpus(docs)
     n, avgdl = bm25_mod.corpus_stats(c.doc_lens)
-    segs = seg_mod.build_segments(
-        c.postings, c.doc_lens, seg_size=SEG_SIZE
-    ).cache()
-    norms = seg_mod.build_norms(c.doc_lens, seg_size=SEG_SIZE).cache()
+    segs, norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, "text", seg_size=SEG_SIZE)
+    )
+    segs, norms = segs.cache(), norms.cache()
     dfs = {
         r["term"]: int(r["docs"])
         for r in c.forms.select("term", "docs").collect()
@@ -77,8 +77,10 @@ def test_merge_tree_equals_direct_build(ctx):
     c, segs, norms, n, avgdl, _ = ctx
     m1, n1 = seg_mod.merge_segments(segs, norms, group=2)
     m2, n2 = seg_mod.merge_segments(m1, n1, group=2)
-    direct = seg_mod.build_segments(
-        c.postings, c.doc_lens, seg_size=SEG_SIZE * 4
+    direct, _ = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(
+            c.docs, "text", seg_size=SEG_SIZE * 4
+        )
     )
     merged_pdf = m2.toPandas().sort_values(["term", "seg_id", "block_id"])
     direct_pdf = direct.toPandas().sort_values(["term", "seg_id", "block_id"])
