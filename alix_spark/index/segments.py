@@ -322,8 +322,8 @@ def build_single_pass_from_docs(
     :func:`forms_from_segments`. No corpus-global statistic is read or
     written by the kernel — everything after the one shuffle is
     embarrassingly parallel. A segment whose docs have no tokens keeps
-    its norm row. Pinned by the digest golden of
-    tests/test_segment_golden.py.
+    its norm row. Pinned by the digest goldens of tests/segment_golden.py
+    (tests in tests/test_xxhash.py).
     """
     from alix_spark.analysis.simple import tokenize_batch
 

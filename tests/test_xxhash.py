@@ -1,5 +1,6 @@
 """Python XXH64 == Spark xxhash64 (seed 42), across length regimes and
-non-ASCII."""
+non-ASCII; plus the segment builder against the digest goldens of the
+two-stage and token-table builders it replaced (tests/segment_golden.py)."""
 
 from __future__ import annotations
 
@@ -23,3 +24,52 @@ def test_xxh64_matches_spark(spark):
     for r in rows:
         assert xxh64_signed(r["t"].encode()) == r["h"], r["t"]
         assert term_bucket(r["t"], 32) == r["b"], r["t"]
+
+
+def test_direct_build_equals_two_stage(spark):
+    """The one-shuffle build's segment rows equal the two-stage build's
+    golden on every column it wrote; its norm rows equal
+    :func:`segments.build_norms` over the doc lengths, and the forms
+    derived from its block metadata equal :attr:`Corpus.forms`."""
+    from alix_spark import Corpus
+    from alix_spark.index import segments as seg_mod
+    from tests import segment_golden as g
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    c = Corpus(docs)
+    segs, sp_norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(
+            docs.select("doc_id", "text"), "text", seg_size=g.SEG_SIZE
+        )
+    )
+    expected = g.golden(g.TWO_STAGE)
+    assert g.digest(segs.toPandas(), list(expected["columns"])) == expected
+
+    def norm_map(norms):
+        return {
+            r["seg_id"]: (r["first_doc"], r["n_docs"], r["sum_dl"],
+                          bytes(r["norm_bytes"]))
+            for r in norms.collect()
+        }
+
+    assert norm_map(seg_mod.build_norms(c.doc_lens, seg_size=g.SEG_SIZE)) == (
+        norm_map(sp_norms)
+    )
+    derived = {
+        (r["term"], r["occs"], r["docs"])
+        for r in seg_mod.forms_from_segments(segs).collect()
+    }
+    forms = {
+        (r["term"], r["occs"], r["docs"])
+        for r in c.forms.select("term", "occs", "docs").collect()
+    }
+    assert derived == forms
+
+
+def test_docs_shuffle_build_equals_token_build(spark):
+    """The raw-doc-shuffle build (tokenize in the kernel) is row- and
+    byte-identical, norm rows and positions included, to the golden of
+    the token-table build over the same documents."""
+    from tests import segment_golden as g
+
+    assert g.digest(g.build_docs(spark).toPandas()) == g.golden(g.SINGLE_PASS)
