@@ -428,15 +428,10 @@ def q_word_network(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2+ — exact-phrase search served from the compressed positional
-    segments (posVb): docs containing "part filter" adjacently."""
-    from alix_spark.index import segments as seg_mod
-    from alix_spark.search.phrase import phrase_search
-
-    c = _corpus(spark, sf_dir)
-    segs, _ = seg_mod.split_single_pass(
-        seg_mod.build_single_pass_from_docs(c.docs, "text", seg_size=1024)
-    )
-    return phrase_search(segs, ["part", "filter"]).orderBy("doc_id")
+    segments (posVb): docs containing "part filter" adjacently, off the
+    cached persisted index."""
+    reader = _index_reader(spark, sf_dir)
+    return reader.phrase(["part", "filter"]).orderBy("doc_id")
 
 
 def q_rank_theme(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,10 +11,9 @@ Design (Lucene-shaped, Spark-native — see SURVEY.md §4.3/§7):
   the salted repartition-by-term of the north rule, with the salt chosen
   to be the doc range so that segments stay directly concatenable.
 * Within a (segment, term): doc ids are delta-gap + varbyte encoded in
-  blocks of ``BLOCK`` docs with per-block metadata (first/last doc,
-  max_tf, min_dl, sum_tf). Queries decode the blocks whole
-  (:func:`decode_blocks`) and score every posting; no reader uses
-  ``max_tf``/``min_dl``, which stay in the index format.
+  blocks of ``BLOCK`` docs with the block's first doc and tf total.
+  Queries decode the blocks whole (:func:`decode_blocks`) and score
+  every posting; doc lengths live only in the norms.
   The encoder reads no corpus-global statistic, which is what makes the
   single-pass build possible: one builder,
   :func:`build_single_pass_from_docs`, shuffles the raw documents by
@@ -36,13 +35,15 @@ Schema of the postings-segment table (one row per term-block):
     n:      int        -- postings in this block (<= BLOCK)
     doc_gaps: binary   -- varbyte(delta(doc_ids))
     tfs:    binary     -- varbyte(tfs)
-    first_doc, last_doc: long
-    max_tf: int        -- block max tf (no reader)
-    min_dl: long       -- block min quantized doc len (no reader)
+    first_doc: long
     sum_tf: long       -- block tf total (forms table derives from this)
     positions: binary  -- varbyte(per-doc delta(positions)), tf values per
                           posting; b"" in segments written without
                           positions (every builder now writes them)
+
+Files of the older layout, which also held ``last_doc``, ``max_tf`` and
+``min_dl``, read unchanged: every reader scans with ``SEGMENT_SCHEMA``,
+and a parquet scan skips file columns outside its read schema.
 
 Positions (the reference's DOCS_AND_FREQS_AND_POSITIONS,
 ``/root/reference/java/alix/lucene/Alix.java:154-165``): each posting's
@@ -93,9 +94,6 @@ SEGMENT_SCHEMA = StructType(
         StructField("doc_gaps", BinaryType()),
         StructField("tfs", BinaryType()),
         StructField("first_doc", LongType()),
-        StructField("last_doc", LongType()),
-        StructField("max_tf", IntegerType()),
-        StructField("min_dl", LongType()),
         StructField("sum_tf", LongType()),
         StructField("positions", BinaryType()),
     ]
@@ -125,7 +123,6 @@ def encode_blocks(
     term_starts: np.ndarray,
     doc_ids: np.ndarray,
     tfs: np.ndarray,
-    dl_q: np.ndarray,
     pos_deltas: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """One segment's postings → its block rows, every block at once.
@@ -139,14 +136,13 @@ def encode_blocks(
     Each column is varbyte-encoded in one pass over the whole segment —
     doc gaps (restarting at every block's first doc), tfs, positions —
     and each block's buffer is a slice at the codec's byte offsets; the
-    block maxima/minima/sums are ``reduceat``s over the block starts.
+    block tf totals are one ``reduceat`` over the block starts.
     """
     n_post = doc_ids.size
     if n_post == 0:
         return _empty_segment_frame()
     d = np.asarray(doc_ids, dtype=np.uint64)
     tfs = np.asarray(tfs, dtype=np.int64)
-    dl_q = np.asarray(dl_q, dtype=np.int64)
     term_starts = np.asarray(term_starts, dtype=np.int64)
     run_lens = np.diff(np.append(term_starts, n_post))
     # block k of a term covers its postings [k·BLOCK, (k+1)·BLOCK)
@@ -182,9 +178,6 @@ def encode_blocks(
             "doc_gaps": cut(gap_buf, gap_off[b_start], gap_off[b_end]),
             "tfs": cut(tf_buf, tf_off[b_start], tf_off[b_end]),
             "first_doc": d[b_start].astype(np.int64),
-            "last_doc": d[b_end - 1].astype(np.int64),
-            "max_tf": np.maximum.reduceat(tfs, b_start),
-            "min_dl": np.minimum.reduceat(dl_q, b_start),
             "sum_tf": np.add.reduceat(tfs, b_start),
             "positions": positions,
         }
@@ -241,12 +234,11 @@ def _encode_segment(
     first = seg_id * seg_size
     codes, uniques = pd.factorize(terms_raw, sort=True)
 
-    # per-doc exact lengths -> norm bytes -> quantized lengths
+    # per-doc exact lengths -> norm bytes
     dl_counts = np.bincount(docs_raw - first)
     present = dl_counts > 0
     arr = np.zeros(dl_counts.size, dtype=np.uint8)
     arr[present] = codec.int_to_byte4(dl_counts[present])
-    dl_all = codec.byte4_to_int(arr)
     norm_row = (
         seg_id,
         first,
@@ -269,7 +261,6 @@ def _encode_segment(
     tfs = np.diff(np.append(starts_rl, c.size)).astype(np.int64)
     gc = c[starts_rl]
     gd = d[starts_rl].astype(np.uint64)
-    dl_q = dl_all[(gd.astype(np.int64) - first)]
 
     # per-run delta encoding: first position absolute, then gaps — one
     # vectorized diff with the run starts reset to absolutes
@@ -283,18 +274,19 @@ def _encode_segment(
     terms = uniques[gc[t_starts]]
     buckets = [term_bucket(term, n_buckets) for term in terms]
     rows = encode_blocks(
-        seg_id, terms, buckets, t_starts, gd, tfs, dl_q, deltas.astype(np.uint64)
+        seg_id, terms, buckets, t_starts, gd, tfs, deltas.astype(np.uint64)
     )
     return rows, norm_row
 
 
 def _with_norm_row(rows: pd.DataFrame, norm: tuple) -> pd.DataFrame:
     """Block rows plus the segment's norm marker row (bucket -1, norm
-    bytes in ``doc_gaps``, sum_dl in ``min_dl``, n_docs in ``n``)."""
+    bytes in ``doc_gaps``, sum_dl in ``sum_tf`` — a segment's token
+    total is its Σ tf — n_docs in ``n``)."""
     seg_id, first, n_docs, sum_dl, norm_bytes = norm
     marker = pd.DataFrame(
         [(-1, seg_id, NORM_MARKER, 0, n_docs, norm_bytes, b"", first,
-          first + n_docs - 1, 0, sum_dl, 0, b"")],
+          sum_dl, b"")],
         columns=rows.columns,
     )
     return pd.concat([rows, marker], ignore_index=True) if len(rows) else marker
@@ -311,7 +303,7 @@ def build_single_pass_from_docs(
     segment's Arrow batch (:func:`simple.tokenize_batch`, C-speed regex
     per document), computes tf + positions + doc lengths + norms
     locally and emits block rows PLUS one norm marker row (term ==
-    NORM_MARKER, norm bytes in ``doc_gaps``, sum_dl in ``min_dl``,
+    NORM_MARKER, norm bytes in ``doc_gaps``, sum_dl in ``sum_tf``,
     n_docs in ``n``).
 
     The exchange carries the documents — corpus-sized — not the token
@@ -354,7 +346,7 @@ def split_single_pass(unioned: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("seg_id"),
         F.col("first_doc"),
         F.col("n").alias("n_docs"),
-        F.col("min_dl").alias("sum_dl"),
+        F.col("sum_tf").alias("sum_dl"),
         F.col("doc_gaps").alias("norm_bytes"),
     )
     return segments, norms
@@ -470,59 +462,22 @@ def positions_per_doc(
     ]
 
 
-def _concat_norms(parts: pd.DataFrame) -> tuple[int, np.ndarray]:
-    """Norm rows of adjacent segments → (first_doc, concatenated bytes).
-
-    The array ends at the last part with docs: a part whose docs are all
-    empty (``n_docs`` 0) adds no bytes, so the merged row equals the row
-    a direct build at the coarser size writes."""
-    first = int(parts["_first_doc"].min())
-    has_docs = parts["_n_docs"] > 0
-    ends = parts["_first_doc"] + parts["_n_docs"]
-    total = int(ends[has_docs].max() - first) if has_docs.any() else 0
-    arr = np.zeros(total, dtype=np.uint8)
-    for fd, nd, nb in zip(
-        parts["_first_doc"], parts["_n_docs"], parts["_norm_bytes"]
-    ):
-        off = int(fd) - first
-        arr[off : off + int(nd)] = np.frombuffer(nb, dtype=np.uint8)
-    return first, arr
-
-
 def merge_segments(
     segments: DataFrame,
     norms: DataFrame,
     group: int = 2,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """One tree-merge round: coalesce ``group`` adjacent segments.
 
-    Needs NO global statistics: per-block min_dl/max_tf/sum_tf merge by
-    re-encode over the concatenated postings; quantized lengths come from
-    the norm bytes (cogrouped per new segment). Returns (merged_segments,
+    Needs NO global statistics and no doc lengths: each new segment's
+    block rows re-encode from its source segments' decoded postings, and
+    its norm row concatenates theirs. Returns (merged_segments,
     merged_norms).
     """
     new_seg = (F.col("seg_id") / group).cast("long")
-    src = segments.withColumn("_new_seg", new_seg)
-    # alias every norm column to a FRESH name: when segments and norms
-    # come from the same parent plan (split_single_pass), the cogroup's
-    # attribute dedup silently drops right-side columns whose expression
-    # ids also appear on the left (seg_id, first_doc) — fresh aliases
-    # force new expression ids on every column.
-    n_src = norms.select(
-        new_seg.alias("_new_seg"),
-        F.col("first_doc").alias("_first_doc"),
-        F.col("n_docs").alias("_n_docs"),
-        F.col("sum_dl").alias("_sum_dl"),
-        F.col("norm_bytes").alias("_norm_bytes"),
-    )
 
-    def merge_group(key, pdfs: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-        if pdfs.empty or npdf.empty:
-            return _empty_segment_frame()
-        (new_seg_id,) = key
-        first, norm_arr = _concat_norms(npdf)
-        dl_all = codec.byte4_to_int(norm_arr)
-
+    def merge_group(pdfs: pd.DataFrame) -> pd.DataFrame:
+        new_seg_id = int(pdfs["_new_seg"].iloc[0])
         # per term, its source segments' (doc_ids, tfs, pos_deltas) in
         # seg order
         terms, buckets, parts = [], [], []
@@ -544,32 +499,47 @@ def merge_segments(
                 "(every builder writes positions) before merging"
             )
         run_lens = [sum(p[0].size for p in term_parts) for term_parts in parts]
-        doc_ids = np.concatenate([p[0] for p in flat])
         # per-doc deltas are self-contained (first position absolute), so
         # merged position streams concatenate without re-encoding
         return encode_blocks(
-            int(new_seg_id),
+            new_seg_id,
             terms,
             buckets,
             np.cumsum([0] + run_lens[:-1]),
-            doc_ids,
+            np.concatenate([p[0] for p in flat]),
             np.concatenate([p[1] for p in flat]),
-            dl_all[doc_ids.astype(np.int64) - first],
             np.concatenate([p[2] for p in flat]) if positional == {True} else None,
         )
 
-    def merge_norms(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["_new_seg"].iloc[0])
-        first, arr = _concat_norms(pdf)
+    def merge_norms(parts: pd.DataFrame) -> pd.DataFrame:
+        """Norm rows of adjacent segments → one row whose array ends at
+        the last part with docs: a part whose docs are all empty
+        (``n_docs`` 0) adds no bytes, so the merged row equals the row a
+        direct build at the coarser size writes."""
+        first = int(parts["first_doc"].min())
+        has_docs = parts["n_docs"] > 0
+        ends = parts["first_doc"] + parts["n_docs"]
+        total = int(ends[has_docs].max() - first) if has_docs.any() else 0
+        arr = np.zeros(total, dtype=np.uint8)
+        for fd, nd, nb in zip(
+            parts["first_doc"], parts["n_docs"], parts["norm_bytes"]
+        ):
+            off = int(fd) - first
+            arr[off : off + int(nd)] = np.frombuffer(nb, dtype=np.uint8)
+        seg = int(parts["_new_seg"].iloc[0])
         return pd.DataFrame(
-            [(seg, first, int(arr.size), int(pdf["_sum_dl"].sum()), arr.tobytes())],
+            [(seg, first, int(arr.size), int(parts["sum_dl"].sum()), arr.tobytes())],
             columns=[f.name for f in NORMS_SCHEMA.fields],
         )
 
     merged = (
-        src.groupby("_new_seg")
-        .cogroup(n_src.groupby("_new_seg"))
+        segments.withColumn("_new_seg", new_seg)
+        .groupBy("_new_seg")
         .applyInPandas(merge_group, SEGMENT_SCHEMA)
     )
-    new_norms = n_src.groupBy("_new_seg").applyInPandas(merge_norms, NORMS_SCHEMA)
+    new_norms = (
+        norms.withColumn("_new_seg", new_seg)
+        .groupBy("_new_seg")
+        .applyInPandas(merge_norms, NORMS_SCHEMA)
+    )
     return merged, new_norms

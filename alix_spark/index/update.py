@@ -77,6 +77,8 @@ def incremental_update(
     ``changed`` has the source schema (repo, path, commit, lang, content
     [, sha256]); ``deleted`` has just the key columns.
     """
+    from pyspark import StorageLevel
+
     from alix_spark import ingest
 
     k = list(key)
@@ -91,9 +93,13 @@ def incremental_update(
     # and feeds both the updates table and the affected-segment
     # aggregate below — the split_changes 2-join formulation plus a
     # distinct-collect of touched_ids cost three extra driver jobs per
-    # update (guide §1.2: the distributed algorithm first)
+    # update (guide §1.2: the distributed algorithm first).
+    # Both persists below last until the caller's ingest.release_after()
+    # block ends, after the writes that read them (process_batch).
     old_ids = docs_old.select(*k, "doc_id")
-    j = changed.join(old_ids, k, "left").cache()
+    j = ingest.scoped_persist(
+        changed.join(old_ids, k, "left"), StorageLevel.MEMORY_AND_DISK_DESER
+    )
     updates = j.filter(F.col("doc_id").isNotNull())
     inserts_src = j.filter(F.col("doc_id").isNull()).drop("doc_id")
 
@@ -153,12 +159,16 @@ def incremental_update(
     # exchange instead of ~4x, guide §2.3) — build_single_pass_from_docs
     # is property-tested row-identical to the token path.
     in_affected = docs_new.filter(seg_range_pred(affected, seg_size))
-    rebuilt = seg_mod.build_single_pass_from_docs(
-        in_affected.select("doc_id", F.col(text_col)),
-        text_col=text_col,
-        seg_size=seg_size,
-        n_buckets=n_buckets,
-    ).cache()  # split_single_pass consumes it twice (segments + norms)
+    # split_single_pass consumes it twice (segments + norms)
+    rebuilt = ingest.scoped_persist(
+        seg_mod.build_single_pass_from_docs(
+            in_affected.select("doc_id", F.col(text_col)),
+            text_col=text_col,
+            seg_size=seg_size,
+            n_buckets=n_buckets,
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     new_segs, new_norms = seg_mod.split_single_pass(rebuilt)
 
     segments_new = segments_old.filter(

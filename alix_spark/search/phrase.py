@@ -25,6 +25,12 @@ from pyspark.sql.types import LongType, StructField, StructType
 from alix_spark.index import segments as seg_mod
 from alix_spark.index.xxhash import term_bucket
 
+# the columns the positional decoder reads — the block metadata stays
+# out of the scan and the shuffle
+_PHRASE_COLS = [
+    "seg_id", "term", "block_id", "n", "doc_gaps", "tfs", "positions",
+]
+
 PHRASE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -80,7 +86,7 @@ def phrase_search(
     buckets = sorted({term_bucket(t, n_buckets) for t in terms})
     pruned = segments.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
-    )
+    ).select(*_PHRASE_COLS)
 
     def kernel(key, pdf):
         empty = pd.DataFrame({"doc_id": [], "freq": []}).astype(

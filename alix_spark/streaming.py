@@ -40,6 +40,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alix_spark import ingest
 from alix_spark.index import segments as seg_mod
 from alix_spark.index.update import incremental_update, seg_range_pred
 
@@ -94,14 +95,10 @@ class StreamingIndexer:
         # span is persisted in the manifest so later versions and GC
         # agree on shard boundaries).
         self.segs_per_shard = segs_per_shard
-        # id assignment persists its range-shuffled partitions so both
-        # consumers of a batch (docs write + segment rebuild) see ONE
-        # boundary draw; once the version is published those cached
-        # partitions are dead weight, and a long-running stream would
-        # accumulate one per micro-batch — so the batch callback clears
-        # the session cache after publish by default. Disable only when
-        # sharing the session with other cached workloads (the leak is
-        # small and LRU-evicted, a correctness non-issue).
+        # the batch callback releases what its own update persisted
+        # once the writes commit; by default it also clears the whole
+        # session cache after publish. Disable that when sharing the
+        # session with other cached workloads (a reader's norms, say).
         self.clear_cache_after_batch = clear_cache_after_batch
         Path(index_dir).mkdir(parents=True, exist_ok=True)
 
@@ -316,40 +313,44 @@ class StreamingIndexer:
         seg_size = self.current_seg_size()
         n_buckets = self.current_n_buckets()
         docs, segs, norms = self.load_tables()
-        docs_new, segs_new, norms_new, affected = incremental_update(
-            docs,
-            segs,
-            norms,
-            batch_df,
-            seg_size=seg_size,
-            n_buckets=n_buckets,
-            text_col=self.text_col,
-        )
-        man = self.read_manifest()
-        v = self.current_version() + 1
-        if not affected:
-            # pure no-op batch (e.g. re-delivered identical rows): nothing
-            # to write, nothing to publish
-            return
-        doc_seg = (F.col("doc_id") / seg_size).cast("long")
-        doc_pred = seg_range_pred(affected, seg_size)
-        seg_pred = F.col("seg_id").isin(affected)
-        new_tables = {}
-        for table, df, seg_col, pre in (
-            ("docs", docs_new, doc_seg, doc_pred),
-            ("segments", segs_new, F.col("seg_id"), seg_pred),
-            ("norms", norms_new, F.col("seg_id"), seg_pred),
-        ):
-            written = self._write_affected(
-                df, table, seg_col, v, affected, pre_filter=pre
+        # what the update persists (its classifying join, the rebuilt
+        # segments, the inserts' id assignment) lives until the three
+        # writes that read it have committed
+        with ingest.release_after():
+            docs_new, segs_new, norms_new, affected = incremental_update(
+                docs,
+                segs,
+                norms,
+                batch_df,
+                seg_size=seg_size,
+                n_buckets=n_buckets,
+                text_col=self.text_col,
             )
-            carried = {
-                s: p
-                for s, p in man["tables"][table].items()
-                if int(s) not in set(affected)
-            }
-            carried.update(written)
-            new_tables[table] = carried
+            man = self.read_manifest()
+            v = self.current_version() + 1
+            if not affected:
+                # pure no-op batch (e.g. re-delivered identical rows):
+                # nothing to write, nothing to publish
+                return
+            doc_seg = (F.col("doc_id") / seg_size).cast("long")
+            doc_pred = seg_range_pred(affected, seg_size)
+            seg_pred = F.col("seg_id").isin(affected)
+            new_tables = {}
+            for table, df, seg_col, pre in (
+                ("docs", docs_new, doc_seg, doc_pred),
+                ("segments", segs_new, F.col("seg_id"), seg_pred),
+                ("norms", norms_new, F.col("seg_id"), seg_pred),
+            ):
+                written = self._write_affected(
+                    df, table, seg_col, v, affected, pre_filter=pre
+                )
+                carried = {
+                    s: p
+                    for s, p in man["tables"][table].items()
+                    if int(s) not in set(affected)
+                }
+                carried.update(written)
+                new_tables[table] = carried
         self._write_manifest(v, seg_size, n_buckets, new_tables, affected)
         # publish only after every file group committed (_SUCCESS
         # markers): a crash mid-batch leaves CURRENT on the previous good

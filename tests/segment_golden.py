@@ -21,6 +21,13 @@ builder ``segments.build_single_pass_from_docs`` replaced:
   ``build_segments(c.postings, c.doc_lens, seg_size=128)`` with
   ``c = Corpus(docs)``, over the sf0.001 documents. That builder wrote
   no positions.
+
+Both goldens hold the 13 columns of the layout they were written in;
+``last_doc``, ``max_tf`` and ``min_dl`` have since left the format, so
+the tests compare the digests of the columns that remain
+(:func:`kept` — each column's digest stands alone). The norm marker
+rows of that layout carried ``sum_dl`` in ``min_dl`` and 0 in
+``sum_tf``.
 """
 
 from __future__ import annotations
@@ -65,6 +72,17 @@ def digest(pdf, columns=None) -> dict:
 
 def golden(path: Path) -> dict:
     return json.loads(path.read_text())
+
+
+def kept(expected: dict) -> dict:
+    """A golden restricted to the columns ``SEGMENT_SCHEMA`` still has."""
+    names = set(seg_mod.SEGMENT_SCHEMA.fieldNames())
+    return {
+        "rows": expected["rows"],
+        "columns": {
+            c: h for c, h in expected["columns"].items() if c in names
+        },
+    }
 
 
 if __name__ == "__main__":

@@ -45,7 +45,7 @@ def test_delta_varbyte_composed(ids):
     assert np.array_equal(codec.delta_decode(codec.varbyte_decode(buf)), arr)
 
 
-def _reference_blocks(term, bucket, seg_id, ids, tfs, dl_q, pos_deltas):
+def _reference_blocks(term, bucket, seg_id, ids, tfs, pos_deltas):
     """One term's block rows, one block at a time: the block layout
     spelled out (segments module docstring)."""
     from alix_spark.index.segments import BLOCK
@@ -62,8 +62,7 @@ def _reference_blocks(term, bucket, seg_id, ids, tfs, dl_q, pos_deltas):
         rows.append((
             bucket, seg_id, term, b0 // BLOCK, d.size,
             codec.varbyte_encode(codec.delta_encode(d))[0],
-            codec.varbyte_encode(t)[0], int(d[0]), int(d[-1]), int(t.max()),
-            int(dl_q[b0:b1].min()), int(t.sum()), pos,
+            codec.varbyte_encode(t)[0], int(d[0]), int(t.sum()), pos,
         ))
     return rows
 
@@ -83,13 +82,12 @@ def test_encode_blocks_at_block_edges():
         tfs.append(rng.integers(1, 300, n).astype(np.int64))
     starts = np.cumsum([0, 127, 128])
     ids_all, tfs_all = np.concatenate(ids), np.concatenate(tfs)
-    dl_q = rng.integers(1, 5000, ids_all.size).astype(np.int64)
     pos = np.concatenate(
         [rng.integers(0, 2**14, int(t)) for t in tfs_all]
     ).astype(np.uint64)
     for pos_deltas in (pos, None):
         got = seg_mod.encode_blocks(
-            9, terms, [4, 5, 6], starts, ids_all, tfs_all, dl_q, pos_deltas
+            9, terms, [4, 5, 6], starts, ids_all, tfs_all, pos_deltas
         )
         assert got.groupby("term").size().to_dict() == {"a": 1, "b": 1, "c": 2}
         expect = []
@@ -98,7 +96,7 @@ def test_encode_blocks_at_block_edges():
             hi = starts[i + 1] if i + 1 < len(terms) else ids_all.size
             occ = np.concatenate(([0], np.cumsum(tfs_all)))
             expect += _reference_blocks(
-                term, 4 + i, 9, ids_all[lo:hi], tfs_all[lo:hi], dl_q[lo:hi],
+                term, 4 + i, 9, ids_all[lo:hi], tfs_all[lo:hi],
                 None if pos_deltas is None else pos_deltas[occ[lo] : occ[hi]],
             )
         assert [
@@ -125,7 +123,7 @@ def test_encode_blocks_of_no_postings_is_empty():
     from alix_spark.index import segments as seg_mod
 
     empty = np.array([], dtype=np.int64)
-    got = seg_mod.encode_blocks(0, [], [], empty, empty, empty, empty, empty)
+    got = seg_mod.encode_blocks(0, [], [], empty, empty, empty, empty)
     assert got.empty
     assert list(got.columns) == [f.name for f in seg_mod.SEGMENT_SCHEMA.fields]
     buf, offsets = codec.varbyte_encode(empty)

@@ -269,8 +269,9 @@ def test_boolean_plans_are_one_cogroup_without_joins(persisted):
     """Every query shape runs one physical plan: one cogroup of the
     pruned segment rows with the norms — no per-term decode stage, no
     join or anti-join, no all-docs norm decode (MapInPandas). The scans
-    read only what the decoder reads: no positions and no block-max
-    metadata."""
+    read only what the decoder reads: no positions and no block
+    metadata; a phrase query's scan adds the positions and nothing
+    else."""
     for df in (
         persisted.search("fast join merge", k=10),
         persisted.search("+fast join -window", k=10),
@@ -287,5 +288,11 @@ def test_boolean_plans_are_one_cogroup_without_joins(persisted):
         scans = re.findall(r"FileScan \w+ \[([^\]]*)\]", plan)
         assert any("doc_gaps" in cols for cols in scans), plan
         for cols in scans:
-            for col in ("max_tf", "min_dl", "positions"):
+            for col in ("sum_tf", "positions"):
                 assert col not in cols, cols
+    plan = persisted.phrase(["part", "filter"])._jdf.queryExecution()
+    plan = plan.executedPlan().toString()
+    (cols,) = re.findall(r"FileScan \w+ \[([^\]]*)\]", plan)
+    assert "positions" in cols, plan
+    for col in ("first_doc", "sum_tf"):
+        assert col not in cols, cols

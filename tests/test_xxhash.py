@@ -26,9 +26,17 @@ def test_xxh64_matches_spark(spark):
         assert term_bucket(r["t"], 32) == r["b"], r["t"]
 
 
+def _norm_map(norms):
+    return {
+        r["seg_id"]: (r["first_doc"], r["n_docs"], r["sum_dl"],
+                      bytes(r["norm_bytes"]))
+        for r in norms.collect()
+    }
+
+
 def test_direct_build_equals_two_stage(spark):
     """The one-shuffle build's segment rows equal the two-stage build's
-    golden on every column it wrote; its norm rows equal
+    golden on every column both wrote; its norm rows equal
     :func:`segments.build_norms` over the doc lengths, and the forms
     derived from its block metadata equal :attr:`Corpus.forms`."""
     from alix_spark import Corpus
@@ -42,18 +50,10 @@ def test_direct_build_equals_two_stage(spark):
             docs.select("doc_id", "text"), "text", seg_size=g.SEG_SIZE
         )
     )
-    expected = g.golden(g.TWO_STAGE)
+    expected = g.kept(g.golden(g.TWO_STAGE))
     assert g.digest(segs.toPandas(), list(expected["columns"])) == expected
-
-    def norm_map(norms):
-        return {
-            r["seg_id"]: (r["first_doc"], r["n_docs"], r["sum_dl"],
-                          bytes(r["norm_bytes"]))
-            for r in norms.collect()
-        }
-
-    assert norm_map(seg_mod.build_norms(c.doc_lens, seg_size=g.SEG_SIZE)) == (
-        norm_map(sp_norms)
+    assert _norm_map(seg_mod.build_norms(c.doc_lens, seg_size=g.SEG_SIZE)) == (
+        _norm_map(sp_norms)
     )
     derived = {
         (r["term"], r["occs"], r["docs"])
@@ -69,7 +69,28 @@ def test_direct_build_equals_two_stage(spark):
 def test_docs_shuffle_build_equals_token_build(spark):
     """The raw-doc-shuffle build (tokenize in the kernel) is row- and
     byte-identical, norm rows and positions included, to the golden of
-    the token-table build over the same documents."""
+    the token-table build over the same documents, on every column both
+    wrote; its split norm rows, ``sum_dl`` included, equal
+    :func:`segments.build_norms` over the doc lengths."""
+    from alix_spark.index import segments as seg_mod
+    from alix_spark.index.build import build_doc_lens_from_docs
     from tests import segment_golden as g
+    from tests.test_mapside_build import _docs
 
-    assert g.digest(g.build_docs(spark).toPandas()) == g.golden(g.SINGLE_PASS)
+    built = g.build_docs(spark)
+    pdf = built.toPandas()
+    # the golden's marker rows carried 0 in sum_tf (sum_dl sat in min_dl)
+    pdf.loc[pdf["term"] == seg_mod.NORM_MARKER, "sum_tf"] = 0
+    expected = g.kept(g.golden(g.SINGLE_PASS))
+    assert g.digest(pdf, list(expected["columns"])) == expected
+
+    docs = _docs(spark)
+    # every doc enters with dl 0 too, as build_index's norms0 does, so
+    # a segment of only empty docs keeps its row
+    lens = build_doc_lens_from_docs(docs).unionByName(
+        docs.select("doc_id", F.lit(0).cast("int").alias("dl"))
+    )
+    _, sp_norms = seg_mod.split_single_pass(built)
+    assert _norm_map(seg_mod.build_norms(lens, seg_size=g.SEG_SIZE)) == (
+        _norm_map(sp_norms)
+    )
