@@ -8,14 +8,15 @@ names/types; doubles rounded to 4 decimals on both sides).
 
 from __future__ import annotations
 
+import hashlib
 import os
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alix_spark import Corpus
-from alix_spark.analysis import simple
 from alix_spark.cooc import ngrams as ngrams_mod
 from alix_spark.cooc import window as window_mod
 from alix_spark.io import load, load_documents
@@ -73,7 +74,7 @@ _MARKER_VALUES = ", ".join(
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> Corpus:
-    return Corpus(load_documents(spark, sf_dir))
+    return Corpus.from_index(spark, _index_dir(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------- #
@@ -116,10 +117,12 @@ def q_doc_lens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corpus_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 — corpus totals: docs, distinct forms, total occurrences."""
     c = _corpus(spark, sf_dir)
-    return c.tokens.agg(
-        F.count_distinct("doc_id").cast("long").alias("n_docs"),
-        F.count_distinct("term").cast("long").alias("n_forms"),
-        F.count(F.lit(1)).cast("long").alias("all_occs"),
+    # a doc_lens row is a doc with a token; forms holds each term's occs
+    return c.doc_lens.agg(F.count(F.lit(1)).cast("long").alias("n_docs")).crossJoin(
+        c.forms.agg(
+            F.count(F.lit(1)).cast("long").alias("n_forms"),
+            F.sum("occs").cast("long").alias("all_occs"),
+        )
     )
 
 
@@ -297,30 +300,26 @@ def q_shared_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_mod.doc_shared_vocab(c.postings, 0, 1, c.doc_lens, k=100)
 
 
-def q_specificity_g(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 — G-test specificity of the lang='fr' sub-corpus, top 50."""
+def _specificity(spark: SparkSession, sf_dir: str, scorer: str) -> DataFrame:
     from alix_spark.stats.scorers import specificity
 
     c = _corpus(spark, sf_dir)
     sub = c.docs.filter(F.col("lang") == "fr").select("doc_id")
     return (
-        specificity(c.postings, c.forms, sub, scorer="g")
+        specificity(c.postings, c.forms, sub, scorer=scorer)
         .orderBy(F.desc("score"), F.asc("term"))
         .limit(50)
     )
+
+
+def q_specificity_g(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A3 — G-test specificity of the lang='fr' sub-corpus, top 50."""
+    return _specificity(spark, sf_dir, "g")
 
 
 def q_specificity_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — chi2 specificity of the lang='fr' sub-corpus, top 50."""
-    from alix_spark.stats.scorers import specificity
-
-    c = _corpus(spark, sf_dir)
-    sub = c.docs.filter(F.col("lang") == "fr").select("doc_id")
-    return (
-        specificity(c.postings, c.forms, sub, scorer="chi2")
-        .orderBy(F.desc("score"), F.asc("term"))
-        .limit(50)
-    )
+    return _specificity(spark, sf_dir, "chi2")
 
 
 def q_tfidf_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,29 +433,27 @@ def q_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reader.phrase(["part", "filter"]).orderBy("doc_id")
 
 
-def q_rank_theme(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q4 — doc ranking under the 'theme' similarity (tf/docLen)."""
+def _rank(spark: SparkSession, sf_dir: str, sim: str) -> DataFrame:
     from alix_spark.search.similarity import rank_docs
 
     c = _corpus(spark, sf_dir)
-    return rank_docs(c.postings, c.doc_lens, list(BM25_TERMS), sim="theme", k=10)
+    return rank_docs(c.postings, c.doc_lens, list(BM25_TERMS), sim=sim, k=10)
+
+
+def q_rank_theme(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q4 — doc ranking under the 'theme' similarity (tf/docLen)."""
+    return _rank(spark, sf_dir, "theme")
 
 
 def q_rank_g(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 — doc ranking under the signed G-test similarity."""
-    from alix_spark.search.similarity import rank_docs
-
-    c = _corpus(spark, sf_dir)
-    return rank_docs(c.postings, c.doc_lens, list(BM25_TERMS), sim="g", k=10)
+    return _rank(spark, sf_dir, "g")
 
 
 def q_rank_chi2inv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 — 'most repulsed doc' ranking (chi2inv: (f−E)²/E when f ≤ E,
     else 0; ``SimilarityChi2inv.java:44-55``)."""
-    from alix_spark.search.similarity import rank_docs
-
-    c = _corpus(spark, sf_dir)
-    return rank_docs(c.postings, c.doc_lens, list(BM25_TERMS), sim="chi2inv", k=10)
+    return _rank(spark, sf_dir, "chi2inv")
 
 
 def q_paint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,8 +486,6 @@ def q_hilite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``<mark id="i">…</mark>`` wraps → string_agg) and both sides report
     its md5 — any offset, ordering, ordinal, or markup divergence
     breaks the hash, not just the length arithmetic."""
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.types import (
         LongType,
@@ -564,66 +559,58 @@ def _corpus_tag(sf_dir: str) -> str:
     """Cache key covering corpus CONTENT, not just the path: a
     regenerated corpus at the same sf_dir changes the parquet files'
     (name, size, mtime) fingerprint and so misses any stale cache."""
-    import glob
-    import hashlib
-
-    src = sorted(
-        glob.glob(os.path.join(sf_dir, "documents.parquet"))
-        + glob.glob(os.path.join(sf_dir, "documents.parquet", "*.parquet"))
-    )
-    fp = ";".join(
-        f"{p}:{os.path.getsize(p)}:{os.stat(p).st_mtime_ns}"
-        for p in src
-        if os.path.isfile(p)
-    )
+    src = Path(sf_dir, "documents.parquet")
+    files = sorted(src.glob("*.parquet")) if src.is_dir() else [src]
+    fp = ";".join(f"{p}:{p.stat().st_size}:{p.stat().st_mtime_ns}" for p in files)
     return hashlib.sha1(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
 
 
+def _package_digest() -> str:
+    """Digest of the ``alix_spark`` sources (each ``*.py`` file's path
+    and bytes), so a change to any builder or schema keys a new index."""
+    import alix_spark
+
+    root = Path(alix_spark.__file__).parent
+    h = hashlib.sha1()
+    for p in sorted(root.rglob("*.py")):
+        h.update(f"{p.relative_to(root)}\0".encode() + p.read_bytes())
+    return h.hexdigest()[:12]
+
+
+_CACHE = "/tmp/alix_entry_cache"
+
+
+def _index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus's one index, built by the production build CLI with
+    its defaults into a cache dir keyed by corpus content and package
+    sources. A dir holding the build's last write (``_metrics``) is
+    reused; the build resumes any other from its lineage records."""
+    from alix_spark import build_index
+
+    out = f"{_CACHE}/index_{_corpus_tag(sf_dir)}_{_package_digest()}"
+    if not os.path.exists(f"{out}/_metrics/_SUCCESS"):
+        build_index.main(["--input", f"{sf_dir}/documents.parquet",
+                          "--out", out, "--text-col", "text"])
+    return out
+
+
 def _index_reader(spark: SparkSession, sf_dir: str):
-    """A PERSISTED compressed index for the corpus (built once per
-    corpus content into a local cache dir, like a build_index.py run),
-    opened through :class:`alix_spark.index.reader.IndexReader` — so
-    boolean/wildcard queries are served from segment decode with no
-    tokenize stage in their plans (the reference serves every query
-    type from one searcher, ``Alix.java:687-756,325-344``)."""
-    from alix_spark.index import segments as seg_mod
+    """The built index opened through ``IndexReader``: every query type
+    served from segment decode, no tokenize stage in any plan (one
+    searcher for all, ``Alix.java:687-756,325-344``)."""
     from alix_spark.index.reader import IndexReader
 
-    out = f"/tmp/alix_entry_cache/index_{_corpus_tag(sf_dir)}"
-    if not os.path.exists(f"{out}/norms/_SUCCESS"):
-        c = _corpus(spark, sf_dir)
-        segs, norms = seg_mod.split_single_pass(
-            seg_mod.build_single_pass_from_docs(c.docs, "text", seg_size=1024)
-        )
-        segs.write.mode("overwrite").parquet(f"{out}/segments")
-        norms.write.mode("overwrite").parquet(f"{out}/norms")
-    return IndexReader.from_tables(
-        spark,
-        spark.read.parquet(f"{out}/segments"),
-        spark.read.parquet(f"{out}/norms"),
-    )
+    return IndexReader(spark, _index_dir(spark, sf_dir))
 
 
 def _offsets_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted offsets table ``(doc_id, pos, start, end, term)``
-    for a corpus — the simple-chain analogue of the reference's term
-    vectors with offsets (``Alix.java:154-165``). Built ONCE per corpus
-    (a build_index.py stage in the product path; materialized to a local
-    cache dir here) and served as a plain parquet scan, so render ops
-    never re-tokenize the corpus."""
-    from alix_spark.analysis.simple import token_offsets
+    """The built offsets table ``(doc_id, pos, start, end, term)`` — term
+    vectors with offsets (``Alix.java:154-165``) — as a parquet scan, so
+    render ops never re-tokenize the corpus."""
+    from alix_spark.index.lineage import read_table, stage_schema
 
-    out = f"/tmp/alix_entry_cache/offsets_{_corpus_tag(sf_dir)}"
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        docs = load_documents(spark, sf_dir)
-        (
-            token_offsets(docs, "doc_id", "text")
-            .repartitionByRange(4, F.col("doc_id"))
-            .sortWithinPartitions("doc_id", "pos")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return spark.read.parquet(out)
+    out = _index_dir(spark, sf_dir)
+    return read_table(spark, f"{out}/offsets", stage_schema(out, "offsets"))
 
 
 def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,9 +700,10 @@ def q_bm25_lucene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 Lucene-faithful variant: SmallFloat-quantized doc lengths, no
     (k1+1) numerator, per-clause float32 rounding. Rank-identity vs the
     reference jar is enforced in pytest; the DuckDB oracle reproduces the
-    full pipeline in SQL (the byte4 quantization is integer arithmetic)."""
-    c = _corpus(spark, sf_dir)
-    return c.search(" ".join(BM25_TERMS), k=10, lucene=True).select(
+    full pipeline in SQL (the byte4 quantization is integer arithmetic).
+    Served from the built index's segments and norms."""
+    r = _index_reader(spark, sf_dir)
+    return r.search(" ".join(BM25_TERMS), k=10).select(
         "doc_id", F.round("score", 4).alias("score")
     )
 
@@ -986,12 +974,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (τ=0.8): (doc_id, cluster=min id of component) — the
     canonical-survivor selection of a training-data dedup pipeline.
     Oracle: DuckDB recursive CTE computing reachability minima."""
-    docs = load_documents(spark, sf_dir)
-    sigs = dedup_mod.minhash_signatures(docs, n_hashes=64)
-    pairs = dedup_mod.minhash_lsh_pairs(sigs, bands=16, rows=4)
-    verified = dedup_mod.ngram_jaccard_pairs(
-        docs, pairs.select("id_a", "id_b")
-    ).filter(F.col("jaccard") >= 0.8)
+    verified = q_minhash_pairs(spark, sf_dir)
     return dedup_mod.dedup_clusters(verified).orderBy("doc_id")
 
 

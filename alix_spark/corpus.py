@@ -9,15 +9,16 @@ exposes search + statistics entry points.
 
 Caching model: each derived DataFrame is built once per Corpus instance and
 ``.cache()``d — the Spark analogue of Alix's per-reader-generation
-SoftReference cache (``Alix.java:190,446-462``). For persistent indexes use
-:mod:`alix_spark.index.store` to write/read the tables as parquet.
+SoftReference cache (``Alix.java:190,446-462``). :meth:`Corpus.from_index`
+opens the same tables from an index written by
+:mod:`alix_spark.build_index`.
 """
 
 from __future__ import annotations
 
 from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alix_spark.analysis import simple
@@ -47,6 +48,27 @@ class Corpus:
         if analyzer not in ("simple", "french"):
             raise ValueError(f"unknown analyzer {analyzer!r}")
         self.analyzer = analyzer
+
+    @classmethod
+    def from_index(cls, spark: SparkSession, index_dir: str) -> "Corpus":
+        """A simple-chain Corpus over a built index: ``docs``,
+        ``postings``, ``doc_lens`` and ``forms`` are the built tables,
+        read with their lineage schemas, and ``tokens`` is ``offsets``
+        without the char spans. All are parquet scans: nothing is cached."""
+        from alix_spark.index.lineage import read_table, stage_schema
+
+        def table(name: str) -> DataFrame:
+            return read_table(
+                spark, f"{index_dir}/{name}", stage_schema(index_dir, name)
+            )
+
+        self = cls(table("docs"), cache=False)
+        # the built tables take the place of the cached properties
+        self.__dict__.update(
+            {name: table(name) for name in ("postings", "doc_lens", "forms")},
+            tokens=table("offsets").select("doc_id", "pos", "term"),
+        )
+        return self
 
     def _maybe_cache(self, df: DataFrame) -> DataFrame:
         return df.cache() if self._cache else df
@@ -97,20 +119,13 @@ class Corpus:
         they did at index time ("same analyzer", ``Alix.java:698``;
         SEARCH-mode locution folding ``FrAnalyzer.java:57-66``).
         """
-        if self.analyzer == "french":
-            from alix_spark.analysis.french import analyze
+        if self.analyzer != "french":
+            return raw_terms
+        from alix_spark.analysis.french import analyze
 
-            if as_sequence:
-                return [
-                    t.indexed
-                    for t in analyze(" ".join(raw_terms))
-                    if t.indexed
-                ]
-            out = []
-            for w in raw_terms:
-                out.extend(t.indexed for t in analyze(w) if t.indexed)
-            return out
-        return raw_terms
+        if as_sequence:
+            raw_terms = [" ".join(raw_terms)]
+        return [t.indexed for w in raw_terms for t in analyze(w) if t.indexed]
 
     @cached_property
     def postings(self) -> DataFrame:

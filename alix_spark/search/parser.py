@@ -10,17 +10,19 @@ Reproduces the operator grammar of ``Alix.query``
 * a query with only MUST_NOT clauses matches all documents minus the
   exclusions (``MatchAllDocsQuery`` base, ``Alix.java:746-754``).
 
-The query string is tokenized by the same simple chain as the corpus so a
-query term always normalizes exactly like an indexed term ("same analyzer"
-principle, ``Alix.java:698``).
+Each whitespace-separated word is tokenized by the index's own simple
+chain (:func:`alix_spark.analysis.simple.split_text`), so a query term
+always normalizes exactly like an indexed term ("same analyzer"
+principle, ``Alix.java:698``): ``don't`` queries the indexed ``don`` and
+``t``. Every token of a word keeps the word's operator, and a trailing
+``*`` makes the word's last token a prefix.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
-_WORD_RE = re.compile(r"([+-]?)([A-Za-z0-9']+)(\*?)")
+from alix_spark.analysis.simple import split_text
 
 
 @dataclass
@@ -40,27 +42,16 @@ class ParsedQuery:
         return self.must + self.should
 
 
-def normalize_term(raw: str) -> str:
-    """Apply the simple analysis chain to one query token."""
-    return re.sub(r"[^a-z0-9]+", "", raw.lower())
-
-
 def parse(q: str) -> ParsedQuery:
     out = ParsedQuery()
-    for op, word, star in _WORD_RE.findall(q):
-        term = normalize_term(word)
-        if not term:
-            continue
-        if star:
+    clauses = {"+": out.must, "-": out.must_not}
+    for word in q.split():
+        terms = split_text(word)
+        if terms and word.endswith("*"):
             # wildcard: only positive occurrence supported (as in reference,
             # where WildcardQuery is added with the parsed occur flag; we
             # keep prefix-positive which covers Alix's UI usage)
-            out.wildcards.append(term)
-        elif op == "+":
-            out.must.append(term)
-        elif op == "-":
-            out.must_not.append(term)
-        else:
-            out.should.append(term)
+            out.wildcards.append(terms.pop())
+        clauses.get(word[0], out.should).extend(terms)
     out.had_wildcards = bool(out.wildcards)
     return out

@@ -296,3 +296,24 @@ def test_boolean_plans_are_one_cogroup_without_joins(persisted):
     assert "positions" in cols, plan
     for col in ("first_doc", "sum_tf"):
         assert col not in cols, cols
+
+
+def test_query_words_split_like_the_index(spark):
+    """A query word is tokenized by the index's own chain: ``don't`` is
+    indexed as ``don`` + ``t``, so it queries those two terms (stripping
+    the apostrophe would query ``dont``, which is never indexed)."""
+    from alix_spark.search.parser import parse
+
+    docs = spark.createDataFrame(
+        [(0, "I don't know"), (1, "don is here"), (2, "no match")],
+        "doc_id long, text string",
+    )
+    segs, norms = seg_mod.split_single_pass(
+        seg_mod.build_single_pass_from_docs(docs, "text", seg_size=4)
+    )
+    reader = IndexReader.from_tables(spark, segs, norms)
+    got = _ranked(reader.search("don't", k=10))
+    assert got and got == _ranked(reader.search("don t", k=10))
+    assert parse("-it's").must_not == ["it", "s"]
+    assert parse("+don't*").must == ["don"]
+    assert parse("+don't*").wildcards == ["t"]
